@@ -15,12 +15,12 @@ Stage layout and resume semantics (progress markers in ``out/progress``):
 1. **noncanon** (global, ``stage:`` marker): the near-dup membership set —
    the one signal that depends on every other document. Materialized once
    (idempotent overwrite) so the verdict pass becomes row-local.
-2. **verdicts** (bucket-resumable, per-bucket ``done`` markers): per-doc
+2. **verdicts** (wave-resumable, per-bucket ``done`` markers): per-doc
    keep/drop verdicts in ``--waves`` wave groups against the stage-1 table,
    each wave overwriting its own ``(run_id, wave)`` partition then appending
    markers — a crash re-does at most one wave, never duplicates rows
-   (same contract as jobs/spans_extract.py, proven by the same
-   crash-injection pytest pattern).
+   (``jobrun.Job.run_waves``, the same loop jobs/spans_extract.py runs,
+   proven by the same crash-injection pytest pattern).
 3. **rejects** (global, ``stage:`` marker): the quarantine-style reject
    table — every non-keep verdict, queryable by reason. Derived from the
    WRITTEN verdicts (cheap columnar re-read, no lineage recompute).
@@ -30,148 +30,83 @@ Stage layout and resume semantics (progress markers in ``out/progress``):
 Exactly-once: every stage writes its output BEFORE its marker, every stage
 output is a deterministic overwrite (hash-ordered selection, no RNG), so a
 crash between write and marker re-runs one stage onto identical bytes.
-``SPARK_GRAFT_CRASH_AFTER`` injects crashes inside exactly those windows
-for the pytest.
+``SPARK_GRAFT_CRASH_AFTER=<stage>`` (or ``verdicts_wave_<n>``) injects a
+crash inside exactly that window for the pytest.
 
 Prints one JSON line: docs_in, kept, rejected, manifest_rows, wall seconds.
 """
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from text_extract_api_spark.checkpoint import (  # noqa: E402
-    bucket_col,
-    completed_buckets,
-    completed_stages,
-    write_bucket_marks,
-    write_stage_marker,
-)
+from text_extract_api_spark import jobrun  # noqa: E402
+from text_extract_api_spark.checkpoint import bucket_col  # noqa: E402
 from text_extract_api_spark.functions.prep import (  # noqa: E402
     funnel_verdicts,
     noncanonical_docs,
     prep_manifest,
 )
 from text_extract_api_spark.io import read_table, write_table  # noqa: E402
-from text_extract_api_spark.session import get_spark  # noqa: E402
-
-
-def _crash_if(point: str) -> None:
-    if os.environ.get("SPARK_GRAFT_CRASH_AFTER") == point:
-        raise RuntimeError(f"injected crash: {point} written, marker not")
 
 
 def main(argv: list[str] | None = None, spark=None) -> dict:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--run-id", default="prep-0")
-    ap.add_argument("--run-ts", default="2026-01-01 00:00:00")
-    ap.add_argument("--master", default=None)
-    ap.add_argument("--waves", type=int, default=1)
-    ap.add_argument("--n-buckets", type=int, default=64)
-    ap.add_argument("--resume", action="store_true")
+    ap = jobrun.arg_parser("prep-0", waves=True)
     ap.add_argument("--neardup-threshold", type=float, default=0.82)
     ap.add_argument("--quality-min", type=float, default=0.45)
     ap.add_argument("--quota", type=int, default=40)
     ap.add_argument("--n-shards", type=int, default=8)
     args = ap.parse_args(argv)
-
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(
-            "corpus_prep", master=args.master,
-            extra_conf={
-                "spark.sql.sources.partitionOverwriteMode": "dynamic",
-                "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
-            },
-        )
-    else:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    job = jobrun.Job("corpus_prep", args, spark)
+    spark = job.spark
 
     noncanon_loc = f"{args.out}/noncanon"
     verdicts_loc = f"{args.out}/verdicts"
     rejects_loc = f"{args.out}/rejects"
     manifest_loc = f"{args.out}/manifest"
-    progress_loc = f"{args.out}/progress"
 
     docs = spark.read.parquet(f"{args.sf_dir}/documents.parquet").repartition(
         spark.sparkContext.defaultParallelism
     )
 
-    stages = (
-        completed_stages(spark, progress_loc, args.run_id) if args.resume else set()
-    )
-    t0 = time.time()
-
     # ---- stage 1: global near-dup membership -----------------------------
-    if "noncanon" not in stages:
-        write_table(
-            noncanonical_docs(docs, args.neardup_threshold).coalesce(8),
-            noncanon_loc, mode="overwrite",
-        )
-        _crash_if("noncanon")
-        write_stage_marker(
-            spark, progress_loc, args.run_id, args.run_ts, "noncanon"
-        )
+    job.run_stage("noncanon", lambda: write_table(
+        noncanonical_docs(docs, args.neardup_threshold).coalesce(8),
+        noncanon_loc, mode="overwrite",
+    ))
     noncanon = read_table(spark, noncanon_loc)
 
-    # ---- stage 2: per-doc verdicts, wave/bucket-resumable ----------------
-    docs_b = docs.withColumn("bucket", bucket_col(F.col("doc_id"), args.n_buckets))
-    todo = docs_b
-    if args.resume:
-        done = completed_buckets(spark, progress_loc, args.run_id)
-        todo = docs_b.join(F.broadcast(done), "bucket", "left_anti")
-    verdicts_done = 0
-    for wave in range(args.waves):
-        wave_docs = todo.filter(F.pmod(F.col("bucket"), F.lit(args.waves)) == wave)
-        if args.waves > 1 and wave_docs.isEmpty():
-            continue
-        verdicts = funnel_verdicts(
-            wave_docs,
-            quality_min=args.quality_min,
-            noncanon=noncanon,
-        ).join(wave_docs.select("doc_id", "bucket"), "doc_id")
-        out = verdicts.select(
-            "doc_id", "verdict", "bucket",
-            F.lit(args.run_id).alias("run_id"), F.lit(wave).alias("wave"),
+    # ---- stage 2: per-doc verdicts, wave-resumable -----------------------
+    def verdicts(wave_docs):
+        return funnel_verdicts(
+            wave_docs, quality_min=args.quality_min, noncanon=noncanon,
+        ).join(wave_docs.select("doc_id", "bucket"), "doc_id").select(
+            "doc_id", "verdict", "bucket"
         )
-        write_table(
-            out, verdicts_loc, mode="overwrite", partition_by=["run_id", "wave"]
-        )
-        _crash_if(f"verdicts_wave_{wave}")
-        written = read_table(spark, verdicts_loc).filter(
-            (F.col("run_id") == args.run_id) & (F.col("wave") == wave)
-        )
-        write_bucket_marks(written, progress_loc, args.run_id, args.run_ts)
-        verdicts_done += written.count()
 
+    totals = job.run_waves(
+        docs.withColumn("bucket", bucket_col(F.col("doc_id"), args.n_buckets)),
+        verdicts_loc, verdicts,
+    )
     all_verdicts = read_table(spark, verdicts_loc).filter(
         F.col("run_id") == args.run_id
     )
 
     # ---- stage 3: reject table (quarantine analog) -----------------------
-    if "rejects" not in stages:
-        write_table(
-            all_verdicts.filter(F.col("verdict") != "keep")
-            .select("doc_id", F.col("verdict").alias("reason"))
-            .coalesce(8),
-            rejects_loc, mode="overwrite",
-        )
-        _crash_if("rejects")
-        write_stage_marker(spark, progress_loc, args.run_id, args.run_ts, "rejects")
+    job.run_stage("rejects", lambda: write_table(
+        all_verdicts.filter(F.col("verdict") != "keep")
+        .select("doc_id", F.col("verdict").alias("reason"))
+        .coalesce(8),
+        rejects_loc, mode="overwrite",
+    ))
 
     # ---- stage 4: quota + shard manifest ----------------------------------
-    manifest_rows = 0
-    if "manifest" not in stages:
+    def write_manifest():
         manifest = prep_manifest(
             docs, all_verdicts, quota=args.quota, n_shards=args.n_shards
         )
@@ -182,35 +117,20 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
             manifest.repartition(args.n_shards, "shard"),
             manifest_loc, mode="overwrite", partition_by=["shard"],
         )
-        _crash_if("manifest")
-        manifest_rows = read_table(spark, manifest_loc).count()
-        write_stage_marker(
-            spark, progress_loc, args.run_id, args.run_ts, "manifest",
-            metrics={"docs": manifest_rows},
-        )
-    else:
-        manifest_rows = read_table(spark, manifest_loc).count()
+        return {"docs": read_table(spark, manifest_loc).count()}
 
-    n_rejected = read_table(spark, rejects_loc).count()
+    job.run_stage("manifest", write_manifest)
+
     n_docs = docs.count()
-    wall = time.time() - t0
-    summary = {
-        "run_id": args.run_id,
-        "docs_in": n_docs,
-        "verdicts_written": verdicts_done,
-        "kept": int(
-            all_verdicts.filter(F.col("verdict") == "keep").count()
-        ),
-        "rejected": int(n_rejected),
-        "manifest_rows": int(manifest_rows),
-        "sec": round(wall, 3),
-        "docs_per_sec": round(n_docs / wall, 2) if wall > 0 else None,
-        "waves": args.waves,
-    }
-    print(json.dumps(summary))
-    if own_session:
-        spark.stop()
-    return summary
+    return job.finish(
+        docs_in=n_docs,
+        verdicts_written=totals["docs"],
+        kept=all_verdicts.filter(F.col("verdict") == "keep").count(),
+        rejected=read_table(spark, rejects_loc).count(),
+        manifest_rows=read_table(spark, manifest_loc).count(),
+        waves=args.waves,
+        rate_docs=n_docs,
+    )
 
 
 if __name__ == "__main__":

@@ -22,11 +22,13 @@ Stage layout and resume semantics (progress markers in ``out/progress``):
    ``--media-hot-min-docs``+ (the OBELICS logo/icon signal). The signals
    that depend on every other document; materialized once so the verdict
    pass becomes doc-local (the ``noncanon`` pattern).
-2. **verdicts** (bucket-resumable, per-bucket ``done`` markers): per-doc
+2. **verdicts** (wave-resumable, per-bucket ``done`` markers): per-doc
    keep/reject verdicts with reasons (no_media / not_interleaved /
-   unanchored / boilerplate / hot_media) in ``--waves`` wave groups, each wave
-   overwriting its own ``(run_id, wave)`` partition then appending
-   markers — a crash re-does at most one wave, never duplicates rows.
+   unanchored / boilerplate / hot_media) in ``--waves`` wave groups, each
+   wave overwriting its own ``(run_id, wave)`` partition then appending
+   markers (``jobrun.Job.run_waves``). Resume skips fully marked waves and
+   recomputes any other wave whole, so a crash re-does at most one wave
+   and never duplicates rows or markers.
 3. **rejects** (global): the reject table, queryable by reason.
 4. **manifest** (global): keep docs → ``epoch_shuffle`` → the
    (doc_id, shard, pos) loader manifest partitioned by shard; zero RNG, so
@@ -39,31 +41,24 @@ Stage layout and resume semantics (progress markers in ``out/progress``):
 
 Exactly-once: every stage writes its output BEFORE its marker and every
 stage output is a deterministic overwrite, so a crash between write and
-marker re-runs one stage onto identical bytes (``SPARK_GRAFT_CRASH_AFTER``
-injects crashes inside exactly those windows for the pytest).
+marker re-runs one stage onto identical bytes
+(``SPARK_GRAFT_CRASH_AFTER=<stage>`` or ``verdicts_wave_<n>`` injects a
+crash inside exactly that window for the pytest).
 
 Prints one JSON line: docs_in, kept, rejected, manifest_rows, wall sec.
 """
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import Window, functions as F  # noqa: E402
 
-from text_extract_api_spark.checkpoint import (  # noqa: E402
-    bucket_col,
-    completed_buckets,
-    completed_stages,
-    write_bucket_marks,
-    write_stage_marker,
-)
+from text_extract_api_spark import jobrun  # noqa: E402
+from text_extract_api_spark.checkpoint import bucket_col  # noqa: E402
 from text_extract_api_spark.functions.interleave import (  # noqa: E402
     MEDIA_KINDS,
     media_reuse_stats,
@@ -71,28 +66,14 @@ from text_extract_api_spark.functions.interleave import (  # noqa: E402
 )
 from text_extract_api_spark.functions.sampling import epoch_shuffle  # noqa: E402
 from text_extract_api_spark.io import read_table, write_table  # noqa: E402
-from text_extract_api_spark.session import get_spark  # noqa: E402
 from text_extract_api_spark.synth import (  # noqa: E402
     synth_flat_spans,
     synthesize_interleaved,
 )
 
 
-def _crash_if(point: str) -> None:
-    if os.environ.get("SPARK_GRAFT_CRASH_AFTER") == point:
-        raise RuntimeError(f"injected crash: {point} written, marker not")
-
-
 def main(argv: list[str] | None = None, spark=None) -> dict:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--run-id", default="mmprep-0")
-    ap.add_argument("--run-ts", default="2026-01-01 00:00:00")
-    ap.add_argument("--master", default=None)
-    ap.add_argument("--waves", type=int, default=1)
-    ap.add_argument("--n-buckets", type=int, default=64)
-    ap.add_argument("--resume", action="store_true")
+    ap = jobrun.arg_parser("mmprep-0", waves=True)
     ap.add_argument("--boiler-min-docs", type=int, default=2)
     ap.add_argument("--boiler-max-pct", type=int, default=50)
     # 2, not the operator's generic 3: the synth corpus's only media reuse
@@ -112,18 +93,8 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     ap.add_argument("--inflate", type=int, default=1,
                     help="deterministic per-document size scale-up (bench)")
     args = ap.parse_args(argv)
-
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(
-            "mm_prep", master=args.master,
-            extra_conf={
-                "spark.sql.sources.partitionOverwriteMode": "dynamic",
-                "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
-            },
-        )
-    else:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    job = jobrun.Job("mm_prep", args, spark)
+    spark = job.spark
 
     hotspans_loc = f"{args.out}/hotspans"
     hotmedia_loc = f"{args.out}/hotmedia"
@@ -131,7 +102,6 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     rejects_loc = f"{args.out}/rejects"
     manifest_loc = f"{args.out}/manifest"
     snapshot_loc = f"{args.out}/snapshot"
-    progress_loc = f"{args.out}/progress"
 
     # The interleaved corpus (Iceberg-scan stand-in). localCheckpoint both
     # shapes once: four stages consume them and the synthesis subtree
@@ -145,14 +115,10 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     ).select(
         "doc_id", "offset", "kind", "text", "media_ref"
     ).localCheckpoint()
-
-    stages = (
-        completed_stages(spark, progress_loc, args.run_id) if args.resume else set()
-    )
-    t0 = time.time()
+    job.start_clock()
 
     # ---- stage 1: corpus-global boilerplate fingerprints -----------------
-    if "hotspans" not in stages:
+    def write_hotspans():
         texts = flat.filter(~F.col("kind").isin(*MEDIA_KINDS)).select(
             F.col("doc_id").cast("string").alias("doc_id"),
             F.md5("text").alias("fp"),
@@ -171,36 +137,17 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
             flat, hot_min_docs=args.media_hot_min_docs
         ).filter(F.col("is_hot")).select("media_ref")
         write_table(hot_media.coalesce(8), hotmedia_loc, mode="overwrite")
-        _crash_if("hotspans")
-        write_stage_marker(
-            spark, progress_loc, args.run_id, args.run_ts, "hotspans"
-        )
+
+    job.run_stage("hotspans", write_hotspans)
     hot_fps = read_table(spark, hotspans_loc)
     hot_refs = read_table(spark, hotmedia_loc)
 
-    # ---- stage 2: per-doc verdicts, wave/bucket-resumable ----------------
-    nested_b = docs_nested.withColumn(
-        "bucket", bucket_col(F.col("doc_id"), args.n_buckets)
-    )
-    todo = nested_b
-    done = None
-    if args.resume:
-        done = completed_buckets(spark, progress_loc, args.run_id)
-        todo = nested_b.join(F.broadcast(done), "bucket", "left_anti")
-    verdicts_done = 0
-    for wave in range(args.waves):
-        in_wave = F.pmod(F.col("bucket"), F.lit(args.waves)) == wave
-        wave_nested = todo.filter(in_wave)
-        # Always skip empty waves (ADVICE r4: the old ``waves > 1`` gate
-        # let a completed --waves 1 resume re-enter its wave, appending
-        # duplicate per-bucket 'done' markers and reporting the full
-        # verdict count as recomputed).
-        if wave_nested.isEmpty():
-            continue
+    # ---- stage 2: per-doc verdicts, wave-resumable -----------------------
+    def verdicts(wave_nested):
         wave_flat = flat.join(
             wave_nested.select("doc_id"), "doc_id", "left_semi"
         )
-        verdicts = mm_funnel_verdicts(
+        return mm_funnel_verdicts(
             wave_nested,
             wave_flat,
             hot_fps,
@@ -210,68 +157,30 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
             boiler_max_pct=args.boiler_max_pct,
             hot_refs=hot_refs,
             media_hot_max_pct=args.media_hot_max_pct,
-        ).join(wave_nested.select("doc_id", "bucket"), "doc_id")
-        out = verdicts.select(
-            "doc_id", "verdict", "boiler_pct", "bucket",
-            F.lit(args.run_id).alias("run_id"), F.lit(wave).alias("wave"),
+        ).join(wave_nested.select("doc_id", "bucket"), "doc_id").select(
+            "doc_id", "verdict", "boiler_pct", "bucket"
         )
-        if done is not None:
-            # The dynamic overwrite replaces this wave's WHOLE (run_id,
-            # wave) partition, but a resumed run recomputes only the
-            # not-yet-marked buckets — so carry forward the rows of
-            # already-marked buckets or they'd vanish from the partition.
-            # (ADVICE r4: previously safe only because write_bucket_marks
-            # appends a wave's marks as one all-or-nothing file; this
-            # removes that atomicity dependency.) localCheckpoint
-            # materializes the carried rows so the overwrite never reads
-            # the path it is replacing.
-            try:
-                prev = (
-                    read_table(spark, verdicts_loc)
-                    .filter(
-                        (F.col("run_id") == args.run_id)
-                        & (F.col("wave") == wave)
-                    )
-                    .join(F.broadcast(done), "bucket", "left_semi")
-                    .select(*out.columns)
-                    .localCheckpoint(eager=True)
-                )
-                out = out.unionByName(prev)
-            except Exception:
-                pass  # no prior verdict table yet — nothing to carry
-        write_table(
-            out, verdicts_loc, mode="overwrite", partition_by=["run_id", "wave"]
-        )
-        _crash_if(f"verdicts_wave_{wave}")
-        written = read_table(spark, verdicts_loc).filter(
-            (F.col("run_id") == args.run_id) & (F.col("wave") == wave)
-        )
-        if done is not None:
-            # marks (and the recomputed count) cover only the buckets this
-            # run actually computed — carried-forward rows keep their
-            # original markers (exactly-once markers per bucket)
-            written = written.join(F.broadcast(done), "bucket", "left_anti")
-        write_bucket_marks(written, progress_loc, args.run_id, args.run_ts)
-        verdicts_done += written.count()
 
+    totals = job.run_waves(
+        docs_nested.withColumn(
+            "bucket", bucket_col(F.col("doc_id"), args.n_buckets)
+        ),
+        verdicts_loc, verdicts,
+    )
     all_verdicts = read_table(spark, verdicts_loc).filter(
         F.col("run_id") == args.run_id
     )
 
     # ---- stage 3: reject table (reason-queryable) ------------------------
-    if "rejects" not in stages:
-        write_table(
-            all_verdicts.filter(F.col("verdict") != "keep")
-            .select("doc_id", F.col("verdict").alias("reason"), "boiler_pct")
-            .coalesce(8),
-            rejects_loc, mode="overwrite",
-        )
-        _crash_if("rejects")
-        write_stage_marker(spark, progress_loc, args.run_id, args.run_ts, "rejects")
+    job.run_stage("rejects", lambda: write_table(
+        all_verdicts.filter(F.col("verdict") != "keep")
+        .select("doc_id", F.col("verdict").alias("reason"), "boiler_pct")
+        .coalesce(8),
+        rejects_loc, mode="overwrite",
+    ))
 
     # ---- stage 4: deterministic epoch-order manifest ---------------------
-    manifest_rows = 0
-    if "manifest" not in stages:
+    def write_manifest():
         kept = all_verdicts.filter(F.col("verdict") == "keep").select("doc_id")
         manifest = epoch_shuffle(
             kept, n_shards=args.n_shards, seed=args.epoch_seed
@@ -280,25 +189,17 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
             manifest.repartition(args.n_shards, "shard"),
             manifest_loc, mode="overwrite", partition_by=["shard"],
         )
-        _crash_if("manifest")
-        manifest_rows = read_table(spark, manifest_loc).count()
-        write_stage_marker(
-            spark, progress_loc, args.run_id, args.run_ts, "manifest",
-            metrics={"docs": manifest_rows},
-        )
-    else:
-        manifest_rows = read_table(spark, manifest_loc).count()
+        return {"docs": read_table(spark, manifest_loc).count()}
+
+    job.run_stage("manifest", write_manifest)
 
     # ---- stage 5: cleaned corpus snapshot, shard-aligned ------------------
-    snapshot_rows = 0
-    if "snapshot" not in stages:
+    def write_snapshot():
         manifest_map = read_table(spark, manifest_loc).select("doc_id", "shard")
         # reuse the persisted stage-1 state instead of recomputing the
         # corpus-wide counts: a text span is dropped iff its fp is in the
         # hotspans table — bit-identical to strip_boilerplate_apply's
         # inline counts (the pytest cross-checks the two forms)
-        from pyspark.sql import Window
-
         is_media = F.col("kind").isin(*MEDIA_KINDS)
         flagged = flat.withColumn(
             "fp", F.when(~is_media, F.md5("text"))
@@ -316,34 +217,21 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
             cleaned.repartition(args.n_shards, "shard"),
             snapshot_loc, mode="overwrite", partition_by=["shard"],
         )
-        _crash_if("snapshot")
-        snapshot_rows = read_table(spark, snapshot_loc).count()
-        write_stage_marker(
-            spark, progress_loc, args.run_id, args.run_ts, "snapshot",
-            metrics={"spans": snapshot_rows},
-        )
-    else:
-        snapshot_rows = read_table(spark, snapshot_loc).count()
+        return {"spans": read_table(spark, snapshot_loc).count()}
 
-    n_rejected = read_table(spark, rejects_loc).count()
+    job.run_stage("snapshot", write_snapshot)
+
     n_docs = docs_nested.count()
-    wall = time.time() - t0
-    summary = {
-        "run_id": args.run_id,
-        "docs_in": n_docs,
-        "verdicts_written": verdicts_done,
-        "kept": int(all_verdicts.filter(F.col("verdict") == "keep").count()),
-        "rejected": int(n_rejected),
-        "manifest_rows": int(manifest_rows),
-        "snapshot_spans": int(snapshot_rows),
-        "sec": round(wall, 3),
-        "docs_per_sec": round(n_docs / wall, 2) if wall > 0 else None,
-        "waves": args.waves,
-    }
-    print(json.dumps(summary))
-    if own_session:
-        spark.stop()
-    return summary
+    return job.finish(
+        docs_in=n_docs,
+        verdicts_written=totals["docs"],
+        kept=all_verdicts.filter(F.col("verdict") == "keep").count(),
+        rejected=read_table(spark, rejects_loc).count(),
+        manifest_rows=read_table(spark, manifest_loc).count(),
+        snapshot_spans=read_table(spark, snapshot_loc).count(),
+        waves=args.waves,
+        rate_docs=n_docs,
+    )
 
 
 if __name__ == "__main__":

@@ -23,38 +23,31 @@ Iceberg table of (path, content) instead of a directory listing.
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from text_extract_api_spark import jobrun  # noqa: E402
+from text_extract_api_spark.checkpoint import bucket_col, write_progress  # noqa: E402
+from text_extract_api_spark.extractors.pdf import pdf_text_extract  # noqa: E402
 from text_extract_api_spark.ingest import ingest_binary, read_binary_files  # noqa: E402
+from text_extract_api_spark.io import read_table, write_table  # noqa: E402
 from text_extract_api_spark.pipeline import run_extract_pipeline  # noqa: E402
-from text_extract_api_spark.session import get_spark  # noqa: E402
 
 TEXT_KINDS = ("text", "html")
 OFFICE_KINDS = ("docx", "pptx")
 
 
 def main(argv: list[str] | None = None, spark=None) -> dict:
-    ap = argparse.ArgumentParser()
+    ap = jobrun.arg_parser("raw-0")
     ap.add_argument("--input", required=True, help="directory of raw files")
-    ap.add_argument("--out", required=True)
     ap.add_argument("--glob", default=None)
-    ap.add_argument("--run-id", default="raw-0")
-    ap.add_argument("--run-ts", default="2026-01-01 00:00:00")
-    ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
-
-    own_session = spark is None
-    if own_session:
-        spark = get_spark("raw_files_extract", master=args.master)
-    t0 = time.time()
+    job = jobrun.Job("raw_files_extract", args, spark)
+    spark = job.spark
 
     typed = ingest_binary(read_binary_files(spark, args.input, args.glob))
 
@@ -90,8 +83,6 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     # born-digital majority; scanned PDFs yield no pages here and would
     # route to OCR in a full deployment). Same (media_ref, page_no,
     # page_text) contract the pipeline's page join expects.
-    from text_extract_api_spark.extractors.pdf import pdf_text_extract
-
     media_pages = pdf_text_extract(
         typed.filter(kind == "pdf").select(
             F.col("path").alias("media_ref"), F.col("content").alias("payload")
@@ -102,27 +93,16 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         spark, docs, media_pages=media_pages, cache=None,
         run_id=args.run_id, office_blobs=office_blobs,
     )
-    results.write.mode("overwrite").parquet(f"{args.out}/results")
+    results_loc = f"{args.out}/results"
+    write_table(results, results_loc, mode="overwrite")
 
     # done markers + metrics from the written results (cheap columnar
     # re-read), so `tools/cli.py result` can poll this run like any other
-    from text_extract_api_spark.checkpoint import bucket_col, write_progress
-
-    written = spark.read.parquet(f"{args.out}/results").withColumn(
+    written = read_table(spark, results_loc).withColumn(
         "bucket", bucket_col(F.col("doc_id"), 16)
     )
-    write_progress(written, f"{args.out}/progress", args.run_id, args.run_ts)
-
-    n = spark.read.parquet(f"{args.out}/results").count()
-    summary = {
-        "run_id": args.run_id,
-        "docs": n,
-        "sec": round(time.time() - t0, 3),
-    }
-    print(json.dumps(summary))
-    if own_session:
-        spark.stop()
-    return summary
+    write_progress(written, job.progress_loc, args.run_id, args.run_ts)
+    return job.finish(docs=written.count())
 
 
 if __name__ == "__main__":

@@ -9,38 +9,32 @@ One batch plan replaces the reference's FastAPI→Celery→Redis queue
 cache anti-join → per-kind vectorized extract → ordered reassembly → write
 results + cache + per-bucket progress markers.
 
-Resumability: documents are processed in ``--waves`` sequential wave groups
-(bucket % waves). Each wave overwrites its own result partitions
-(dynamic partition overwrite → idempotent) and then appends its progress
-markers; ``--resume`` skips buckets already marked done for the run-id, so a
-crash costs at most one wave of recompute and never duplicates output rows.
+Resumability (``jobrun.Job.run_waves``): documents are processed in
+``--waves`` sequential wave groups (bucket % waves). Each wave overwrites
+its own ``(run_id, wave)`` result partition (dynamic partition overwrite →
+idempotent), appends its cache entries, then its per-bucket progress
+markers; ``--resume`` skips every wave whose buckets are all marked done for
+the run-id and recomputes any other wave whole, so a crash costs at most one
+wave of recompute and never duplicates output rows or markers.
 
 Prints one JSON line: docs, spans, wall seconds, docs/sec.
 """
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from text_extract_api_spark.checkpoint import (  # noqa: E402
-    bucket_col,
-    completed_buckets,
-    observe_extraction,
-    write_progress,
-)
+from text_extract_api_spark import jobrun  # noqa: E402
+from text_extract_api_spark.checkpoint import bucket_col  # noqa: E402
 from text_extract_api_spark.extractors.media import validate_media_pages  # noqa: E402
-from text_extract_api_spark.io import read_table, write_table  # noqa: E402
+from text_extract_api_spark.io import read_table, table_exists, write_table  # noqa: E402
 from text_extract_api_spark.partitioning import repartition_by_size  # noqa: E402
 from text_extract_api_spark.pipeline import run_extract_pipeline  # noqa: E402
-from text_extract_api_spark.session import get_spark  # noqa: E402
 from text_extract_api_spark.synth import synthesize_interleaved_office  # noqa: E402
 
 
@@ -63,9 +57,7 @@ def _autoscale_shuffle_partitions(spark) -> None:
     explicit ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` pins the count instead
     (the scaling bench holds it fixed across parallelism levels — there it
     is a controlled variable, not a knob)."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"):
+    if os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"):
         return
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     cached = sum(i.memSize() + i.diskSize() for i in infos)
@@ -76,15 +68,7 @@ def _autoscale_shuffle_partitions(spark) -> None:
 
 
 def main(argv: list[str] | None = None, spark=None) -> dict:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--run-id", default="run-0")
-    ap.add_argument("--run-ts", default="2026-01-01 00:00:00")
-    ap.add_argument("--master", default=None)
-    ap.add_argument("--waves", type=int, default=1)
-    ap.add_argument("--n-buckets", type=int, default=64)
-    ap.add_argument("--resume", action="store_true")
+    ap = jobrun.arg_parser("run-0", waves=True)
     ap.add_argument("--input-table", default=None,
                     help="pre-built interleaved table location (skips synthesis)")
     ap.add_argument("--media-table", default=None)
@@ -99,24 +83,8 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
                     help="run the pipeline on a small slice before the timed "
                          "window (JIT + Python-worker warmup for benches)")
     args = ap.parse_args(argv)
-
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(
-            "spans_extract", master=args.master,
-            extra_conf={
-                "spark.sql.sources.partitionOverwriteMode": "dynamic",
-                # v2 commit: tasks move their own files at task-commit instead
-                # of the driver serially renaming every file at job end — the
-                # serial rename is pure non-scaling overhead on multi-file
-                # writes
-                "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
-            },
-        )
-    else:
-        # injected session (tests): dynamic overwrite is a correctness
-        # requirement for idempotent per-wave re-writes, set it at runtime
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    job = jobrun.Job("spans_extract", args, spark)
+    spark = job.spark
 
     if args.input_table:
         docs = read_table(spark, args.input_table)
@@ -137,7 +105,6 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
 
     results_loc = f"{args.out}/results"
     cache_loc = f"{args.out}/cache"
-    progress_loc = f"{args.out}/progress"
     quarantine_loc = f"{args.out}/quarantine"
 
     # Media validity quarantine (reference: PIL verify raises per image,
@@ -164,15 +131,9 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         office_blobs = office_blobs.persist()
         office_blobs.count()
 
-    try:
-        cache = read_table(spark, cache_loc)
-    except Exception:
-        cache = None
+    cache = read_table(spark, cache_loc) if table_exists(spark, cache_loc) else None
 
     docs = docs.withColumn("bucket", bucket_col(F.col("doc_id"), args.n_buckets))
-    if args.resume:
-        done = completed_buckets(spark, progress_loc, args.run_id)
-        docs = docs.join(F.broadcast(done), "bucket", "left_anti")
 
     if args.warmup:
         # JIT-compile the hot codegen paths and spawn the Python workers
@@ -185,14 +146,9 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         )
         warm.write.format("noop").mode("overwrite").save()
 
-    t0 = time.time()
-    total_docs = 0
-    total_spans = 0
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    for wave in range(args.waves):
-        wave_docs = docs.filter(F.pmod(F.col("bucket"), F.lit(args.waves)) == wave)
-        if args.waves > 1 and wave_docs.isEmpty():
-            continue
+
+    def extract(wave_docs):
         if args.input_table:
             # Unknown external layout: size-bucketed salted repartition
             # spreads oversized-media docs before the heavy stages. The
@@ -208,44 +164,13 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
             media, cache, args.run_id, office_blobs=office_blobs,
         )
         # bucket is a pure function of doc_id — recompute instead of joining
-        results = results.withColumn(
+        return results.withColumn(
             "bucket", bucket_col(F.col("doc_id"), args.n_buckets)
-        ).withColumn("wave", F.lit(wave))
-        # In-flight metrics (Celery update_state analog): the observation
-        # node rides the write action — no separate counting pass.
-        results, obs = observe_extraction(results, f"wave_{wave}")
-        # ONE heavy action per wave: the results write. Partition dirs by
-        # (run_id, wave) — the WAVE is the recompute/overwrite granularity
-        # (markers append per wave in one atomic single-file write, so a
-        # wave is either fully marked or fully redone; the crash-window
-        # pytest proves exactly-once either way). Partitioning by bucket
-        # dirs (r2) forced a full-array repartition before the write purely
-        # to avoid a tasks×buckets small-file spray; with one wave dir every
-        # task writes one file, so the results keep their join partitioning
-        # and the spans cross ZERO extra exchanges between extraction and
-        # storage (r3, VERDICT item 4). bucket stays a data column for
-        # markers/resume bookkeeping.
-        write_table(
-            results,
-            results_loc, mode="overwrite", partition_by=["run_id", "wave"],
         )
-        # Test-only crash injection INSIDE the claimed at-most-one-wave
-        # window (checkpoint.py:10-13): results written, markers not — a
-        # resume must recompute exactly this wave and stay exactly-once.
-        if os.environ.get("SPARK_GRAFT_CRASH_AFTER_RESULTS") == f"wave_{wave}":
-            raise RuntimeError(
-                f"injected crash: wave {wave} results written, markers not"
-            )
-        # Cache entries, progress markers, and run metrics all derive from
-        # the *written* results (cheap columnar re-read) — not from the
-        # results lineage, which would recompute the extraction subtree per
-        # action, nor from a persisted frame, which pins executor memory.
-        written = (
-            read_table(spark, results_loc)
-            .filter(
-                (F.col("run_id") == args.run_id) & (F.col("wave") == wave)
-            )
-        )
+
+    def append_cache(written):
+        # cache entries derive from the *written* results, not from the
+        # results lineage, which would recompute the extraction subtree
         new_cache = (
             written.filter(~F.col("from_cache"))
             .dropDuplicates(["content_hash"])
@@ -259,31 +184,21 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         # the cache table is small rows (hash + spans); 8 output files beat
         # shuffle.partitions× tiny files and their task-commit overhead
         write_table(new_cache.coalesce(8), cache_loc, mode="append")
-        # metrics observed during the results write — no extra counting
-        # action; milestone row rides the progress append (one action)
-        metrics = obs.get
-        write_progress(
-            written, progress_loc, args.run_id, args.run_ts,
-            milestone=(f"wave_{wave}_extracted", metrics),
-        )
-        total_docs += int(metrics.get("docs") or 0)
-        total_spans += int(metrics.get("spans") or 0)
 
-    wall = time.time() - t0
-    summary = {
-        "run_id": args.run_id,
-        "docs": total_docs,
-        "spans": total_spans,
-        "quarantined": n_quarantined,
-        "sec": round(wall, 3),
-        "docs_per_sec": round(total_docs / wall, 2) if wall > 0 else None,
-        "waves": args.waves,
-    }
-    print(json.dumps(summary))
-    if own_session:
-        spark.stop()
+    # ONE heavy action per wave: the results write, partitioned by (run_id,
+    # wave). Partitioning by bucket dirs (r2) forced a full-array
+    # repartition before the write purely to avoid a tasks×buckets
+    # small-file spray; with one wave dir every task writes one file, so the
+    # results keep their join partitioning and the spans cross ZERO extra
+    # exchanges between extraction and storage (r3, VERDICT item 4). bucket
+    # stays a data column for markers/resume bookkeeping.
+    job.start_clock()
+    totals = job.run_waves(docs, results_loc, extract, after_write=append_cache)
     # injected sessions: caller owns cache cleanup (tests clearCache)
-    return summary
+    return job.finish(
+        docs=totals["docs"], spans=totals["spans"], quarantined=n_quarantined,
+        waves=args.waves, rate_docs=totals["docs"],
+    )
 
 
 if __name__ == "__main__":

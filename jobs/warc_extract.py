@@ -21,35 +21,27 @@ like at crawl scale (the reference has no batch door at all).
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from text_extract_api_spark import jobrun  # noqa: E402
 from text_extract_api_spark.extractors.warc import warc_ingest  # noqa: E402
 from text_extract_api_spark.ingest import read_binary_files  # noqa: E402
+from text_extract_api_spark.io import read_table, write_table  # noqa: E402
 from text_extract_api_spark.pipeline import run_extract_pipeline  # noqa: E402
-from text_extract_api_spark.session import get_spark  # noqa: E402
 
 
 def main(argv: list[str] | None = None, spark=None) -> dict:
-    ap = argparse.ArgumentParser()
+    ap = jobrun.arg_parser("warc-0", run_ts=False)
     ap.add_argument("--input", required=True, help="directory of WARC segments")
-    ap.add_argument("--out", required=True)
     ap.add_argument("--glob", default=None)
-    ap.add_argument("--run-id", default="warc-0")
-    ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
-
-    own_session = spark is None
-    if own_session:
-        spark = get_spark("warc_extract", master=args.master)
-    t0 = time.time()
+    job = jobrun.Job("warc_extract", args, spark)
+    spark = job.spark
 
     segments = read_binary_files(spark, args.input, args.glob).select(
         F.col("path").alias("segment"), F.col("content").alias("payload")
@@ -89,14 +81,9 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     results, _ = run_extract_pipeline(
         spark, docs, media_pages=None, cache=None, run_id=args.run_id
     )
-    results.write.mode("overwrite").parquet(f"{args.out}/results")
-
-    n = spark.read.parquet(f"{args.out}/results").count()
-    summary = {"run_id": args.run_id, "docs": n, "sec": round(time.time() - t0, 3)}
-    print(json.dumps(summary))
-    if own_session:
-        spark.stop()
-    return summary
+    results_loc = f"{args.out}/results"
+    write_table(results, results_loc, mode="overwrite")
+    return job.finish(docs=read_table(spark, results_loc).count())
 
 
 if __name__ == "__main__":

@@ -61,6 +61,24 @@ def test_completed_buckets_empty_when_no_progress(spark, tmp_path):
     assert done.count() == 0
 
 
+def test_corrupt_progress_raises_instead_of_reading_as_empty(spark, tmp_path):
+    """Only a missing or empty progress directory means "no progress yet".
+    A progress file that cannot be read must fail the resume loudly: read
+    as empty, it would recompute and re-mark every finished wave."""
+    from text_extract_api_spark.checkpoint import completed_stages
+
+    progress = tmp_path / "progress"
+    progress.mkdir()
+    assert completed_buckets(spark, str(progress), "x").count() == 0
+    assert completed_stages(spark, str(progress), "x") == set()
+
+    (progress / "part-00000.parquet").write_bytes(b"not parquet " * 16)
+    with pytest.raises(Exception, match="parquet"):
+        completed_buckets(spark, str(progress), "x")
+    with pytest.raises(Exception, match="parquet"):
+        completed_stages(spark, str(progress), "x")
+
+
 def test_observation_milestones_and_polling(spark, docs, tmp_path):
     """Observation metrics ride the consuming action (Celery update_state
     analog); milestone rows are pollable and never match the resume filter."""
@@ -117,10 +135,10 @@ def test_crash_between_results_write_and_marker_is_exactly_once(
         "--run-id", "crash1", "--waves", "2", "--n-buckets", str(N_BUCKETS),
     ]
 
-    monkeypatch.setenv("SPARK_GRAFT_CRASH_AFTER_RESULTS", "wave_1")
+    monkeypatch.setenv("SPARK_GRAFT_CRASH_AFTER", "results_wave_1")
     with pytest.raises(RuntimeError, match="injected crash"):
         job.main(argv, spark=spark)
-    monkeypatch.delenv("SPARK_GRAFT_CRASH_AFTER_RESULTS")
+    monkeypatch.delenv("SPARK_GRAFT_CRASH_AFTER")
     spark.catalog.clearCache()
 
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()

@@ -18,11 +18,11 @@ SF = "/root/testdata/sf0.001"
 N_BUCKETS = 16
 
 
-def _job():
+def _job(name: str = "mm_prep"):
     spec = importlib.util.spec_from_file_location(
-        "mm_prep_job",
+        f"{name}_job",
         os.path.join(
-            os.path.dirname(os.path.dirname(__file__)), "jobs", "mm_prep.py"
+            os.path.dirname(os.path.dirname(__file__)), "jobs", f"{name}.py"
         ),
     )
     mod = importlib.util.module_from_spec(spec)
@@ -116,24 +116,37 @@ def test_mm_prep_end_to_end_and_idempotent_resume(spark, tmp_path):
     assert _manifest_rows(spark, out) == before
 
 
-def test_mm_prep_waves1_complete_resume_is_noop(spark, tmp_path):
+# resumable job → (summary count of recomputed rows, per-doc output table)
+_RESUMABLE = {
+    "mm_prep": ("verdicts_written", "verdicts"),
+    "corpus_prep": ("verdicts_written", "verdicts"),
+    "spans_extract": ("docs", "results"),
+}
+
+
+@pytest.mark.parametrize("name", list(_RESUMABLE))
+def test_mm_prep_waves1_complete_resume_is_noop(spark, tmp_path, name):
     """ADVICE r4: with --waves 1 the empty-wave skip was gated on
     waves > 1, so resuming a COMPLETED single-wave run re-entered the
-    wave — duplicate per-bucket markers and a full verdicts_written
-    count. A completed resume must be a true no-op at every wave count."""
-    job = _job()
-    out = str(tmp_path / "mmprep1")
+    wave — duplicate per-bucket markers and a full recomputed count. A
+    completed resume must be a true no-op at every wave count, in every
+    job that resumes by wave."""
+    job = _job(name)
+    recomputed, table = _RESUMABLE[name]
+    out = str(tmp_path / name)
     argv = [
         "--sf-dir", SF, "--out", out, "--run-id", "w1",
         "--waves", "1", "--n-buckets", str(N_BUCKETS),
     ]
     s1 = job.main(argv, spark=spark)
-    assert s1["docs_in"] == 500
-    before = _manifest_rows(spark, out)
+    assert s1[recomputed] == 500
+    has_manifest = name != "spans_extract"
+    before = _manifest_rows(spark, out) if has_manifest else None
     s2 = job.main(argv + ["--resume"], spark=spark)
     spark.catalog.clearCache()
-    assert s2["verdicts_written"] == 0
-    assert _manifest_rows(spark, out) == before
+    assert s2[recomputed] == 0
+    if has_manifest:
+        assert _manifest_rows(spark, out) == before
     # exactly-once markers survived the resume
     prog = spark.read.parquet(f"{out}/progress")
     marks = prog.filter((F.col("run_id") == "w1") & (F.col("status") == "done"))
@@ -143,10 +156,10 @@ def test_mm_prep_waves1_complete_resume_is_noop(spark, tmp_path):
     }
     assert set(per_bucket) == set(range(N_BUCKETS))
     assert all(c == 1 for c in per_bucket.values()), per_bucket
-    # and no verdict rows were duplicated
-    verd = spark.read.parquet(f"{out}/verdicts").filter(F.col("run_id") == "w1")
-    assert verd.count() == 500
-    assert verd.select("doc_id").distinct().count() == 500
+    # and no output rows were duplicated
+    rows = spark.read.parquet(f"{out}/{table}").filter(F.col("run_id") == "w1")
+    assert rows.count() == 500
+    assert rows.select("doc_id").distinct().count() == 500
 
 
 def test_mm_prep_partial_bucket_marks_resume_keeps_marked_rows(

@@ -4,25 +4,30 @@ The reference surfaces progress through Celery ``update_state`` milestones
 (``extract/tasks.py:40-94``: PENDING → PROGRESS(10/30/50/75) → SUCCESS) and
 resumes nothing — a crashed task recomputes from scratch (modulo the Redis
 cache). At 10^12 documents a restartable job is mandatory (north rule), so
-the engine checkpoints at *bucket* granularity:
+the engine checkpoints per bucket and resumes per wave:
 
-- every document is assigned a stable bucket ``pmod(xxhash64(doc_id), B)``;
-- a run writes results partitioned by bucket, then appends one ``done``
-  progress row per bucket (result write precedes the marker → a crash
-  between the two re-does at most one bucket, and the overwrite-by-bucket
-  write keeps that idempotent — exactly-once results);
-- resume = anti-join the input against completed buckets of the same
-  ``run_id`` and process only the remainder.
+- every document is assigned a stable bucket ``pmod(xxhash64(doc_id), B)``,
+  and bucket ``b`` belongs to wave ``b % waves``;
+- a run writes each wave's rows into its own ``(run_id, wave)`` partition
+  (dynamic partition overwrite), then appends one ``done`` progress row per
+  bucket of the wave. The write precedes the markers, so a crash between
+  the two leaves the wave's buckets unmarked;
+- resume skips a wave whose buckets are all marked and recomputes any other
+  wave whole, overwriting its partition — so results stay exactly-once and
+  each bucket is marked once (``jobrun.Job.run_waves``).
 
-Bucket count B is the resume granularity / bookkeeping trade-off: B ≈ 4×
-executor count keeps markers tiny at any scale.
+Global stages (their output depends on every input row) get one
+``stage:<name>`` row instead (``write_stage_marker``).
+
+Bucket count B is the bookkeeping granularity: B ≈ 4× executor count keeps
+markers tiny at any scale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from .io import read_table, write_table
+from .io import read_table, table_exists, write_table
 from .partitioning import payload_size_col
 
 _PROGRESS_DDL = (
@@ -32,10 +37,10 @@ _PROGRESS_DDL = (
 
 
 def _milestone_row(
-    spark: SparkSession, run_id: str, run_ts: str, name: str, metrics: dict
+    spark: SparkSession, run_id: str, run_ts: str, status: str, metrics: dict
 ) -> DataFrame:
-    """One milestone progress row (shared by write_milestone and the merged
-    write_progress path — the schema must stay identical between them)."""
+    """One bucket-less progress row (milestones and stage markers — the
+    schema must stay identical to the per-bucket ``done`` rows)."""
     return (
         spark.createDataFrame(
             [
@@ -43,7 +48,7 @@ def _milestone_row(
                     run_id,
                     -1,
                     -1,
-                    f"milestone:{name}",
+                    status,
                     int(metrics.get("docs") or 0),
                     int(metrics.get("spans") or 0),
                     int(metrics.get("bytes") or 0),
@@ -56,21 +61,23 @@ def _milestone_row(
     )
 
 
+def _run_progress(spark: SparkSession, progress_loc: str, run_id: str):
+    """This run's progress rows, or None before the first marker."""
+    if not table_exists(spark, progress_loc):
+        return None
+    return read_table(spark, progress_loc).filter(F.col("run_id") == run_id)
+
+
 def bucket_col(doc_id: Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(doc_id), F.lit(n_buckets)).cast("int")
 
 
 def completed_buckets(spark: SparkSession, progress_loc: str, run_id: str) -> DataFrame:
     """Buckets already marked done for this run (empty if no progress yet)."""
-    try:
-        prog = read_table(spark, progress_loc)
-    except Exception:
+    prog = _run_progress(spark, progress_loc, run_id)
+    if prog is None:
         return spark.createDataFrame([], "bucket int")
-    return (
-        prog.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        .select("bucket")
-        .distinct()
-    )
+    return prog.filter(F.col("status") == "done").select("bucket").distinct()
 
 
 def filter_resumable(
@@ -79,6 +86,16 @@ def filter_resumable(
     """Drop documents whose bucket already completed (idempotent resume)."""
     withb = docs.withColumn("bucket", bucket_col(F.col("doc_id"), n_buckets))
     return withb.join(F.broadcast(done), "bucket", "left_anti")
+
+
+def _spans_metrics(results: DataFrame) -> tuple[Column, Column]:
+    """(spans, bytes) aggregates — zero for frames without a spans payload
+    (e.g. the prep jobs' verdict rows)."""
+    if "spans" not in results.columns:
+        return F.lit(0), F.lit(0)
+    # chars of extracted text only — a to_json over the span array would
+    # re-serialize the whole corpus just for a progress metric
+    return F.sum(F.size("spans")), F.sum(payload_size_col())
 
 
 def observe_extraction(results: DataFrame, name: str):
@@ -92,12 +109,13 @@ def observe_extraction(results: DataFrame, name: str):
     """
     from pyspark.sql import Observation
 
+    spans, nbytes = _spans_metrics(results)
     obs = Observation(name)
     observed = results.observe(
         obs,
         F.count(F.lit(1)).alias("docs"),
-        F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("spans"),
-        F.coalesce(F.sum(payload_size_col()), F.lit(0)).alias("bytes"),
+        F.coalesce(spans, F.lit(0)).alias("spans"),
+        F.coalesce(nbytes, F.lit(0)).alias("bytes"),
     )
     return observed, obs
 
@@ -115,7 +133,7 @@ def write_milestone(
     (10/30/50/75, tasks.py:41-63). Milestone rows use bucket=-1 and never
     match the ``status == 'done'`` resume filter."""
     write_table(
-        _milestone_row(spark, run_id, run_ts, milestone, metrics),
+        _milestone_row(spark, run_id, run_ts, f"milestone:{milestone}", metrics),
         progress_loc,
         mode="append",
     )
@@ -124,20 +142,15 @@ def write_milestone(
 def poll_progress(spark: SparkSession, progress_loc: str, run_id: str) -> DataFrame:
     """Result-polling view (the reference's GET /ocr/result state machine,
     main.py:171-188): per-status rollup for a run. Empty frame = PENDING."""
-    try:
-        prog = read_table(spark, progress_loc)
-    except Exception:
+    prog = _run_progress(spark, progress_loc, run_id)
+    if prog is None:
         return spark.createDataFrame(
             [], "status string, n_marks long, docs_done long, spans_done long"
         )
-    return (
-        prog.filter(F.col("run_id") == run_id)
-        .groupBy("status")
-        .agg(
-            F.count("*").alias("n_marks"),
-            F.sum("docs_done").alias("docs_done"),
-            F.sum("spans_done").alias("spans_done"),
-        )
+    return prog.groupBy("status").agg(
+        F.count("*").alias("n_marks"),
+        F.sum("docs_done").alias("docs_done"),
+        F.sum("spans_done").alias("spans_done"),
     )
 
 
@@ -148,7 +161,8 @@ def write_progress(
     run_ts: str,
     milestone: tuple[str, dict] | None = None,
 ) -> None:
-    """Append one done-marker row per bucket with extraction metrics.
+    """Append one done-marker row per bucket with extraction metrics
+    (spans/bytes are zero when ``results`` has no spans payload).
 
     ``run_ts`` is an injected timestamp (job argument) — never wall clock,
     per the determinism contract (the reference templates wall-clock
@@ -160,14 +174,13 @@ def write_progress(
     (each extra action is fixed non-scaling driver time; measured ~1.9 s for
     a single milestone row at local[8]).
     """
+    spans, nbytes = _spans_metrics(results)
     marks = (
         results.groupBy("bucket")
         .agg(
             F.count("*").alias("docs_done"),
-            F.sum(F.size("spans")).alias("spans_done"),
-            # chars of extracted text only — a to_json over the span array
-            # would re-serialize the whole corpus just for a progress metric
-            F.sum(payload_size_col()).alias("bytes_done"),
+            spans.alias("spans_done"),
+            nbytes.alias("bytes_done"),
         )
         .select(
             F.lit(run_id).alias("run_id"),
@@ -183,42 +196,12 @@ def write_progress(
     if milestone is not None:
         name, metrics = milestone
         marks = marks.unionByName(
-            _milestone_row(results.sparkSession, run_id, run_ts, name, metrics)
+            _milestone_row(
+                results.sparkSession, run_id, run_ts, f"milestone:{name}", metrics
+            )
         )
     # one marker row per bucket — without the coalesce this writes B files of
     # one row each and pays B task-commits for a KB of data
-    write_table(marks.coalesce(1), progress_loc, mode="append")
-
-
-def write_bucket_marks(
-    results: DataFrame,
-    progress_loc: str,
-    run_id: str,
-    run_ts: str,
-    milestone: tuple[str, dict] | None = None,
-) -> None:
-    """``write_progress`` for frames WITHOUT a spans payload (e.g. the prep
-    job's verdict rows): one done-marker per bucket, docs counted, spans/
-    bytes zero. Same schema, same resume semantics."""
-    marks = (
-        results.groupBy("bucket")
-        .agg(F.count("*").alias("docs_done"))
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.spark_partition_id().alias("partition_id"),
-            F.col("bucket"),
-            F.lit("done").alias("status"),
-            F.col("docs_done").cast("long"),
-            F.lit(0).cast("long").alias("spans_done"),
-            F.lit(0).cast("long").alias("bytes_done"),
-            F.lit(run_ts).cast("timestamp").alias("updated_at"),
-        )
-    )
-    if milestone is not None:
-        name, metrics = milestone
-        marks = marks.unionByName(
-            _milestone_row(results.sparkSession, run_id, run_ts, name, metrics)
-        )
     write_table(marks.coalesce(1), progress_loc, mode="append")
 
 
@@ -236,40 +219,22 @@ def write_stage_marker(
     The stage's output write precedes the marker, and stage outputs are
     deterministic overwrites, so a crash between the two re-does exactly
     one stage and lands on identical bytes — exactly-once."""
-    metrics = metrics or {}
-    row = (
-        spark.createDataFrame(
-            [
-                (
-                    run_id,
-                    -1,
-                    -1,
-                    f"stage:{stage}",
-                    int(metrics.get("docs") or 0),
-                    int(metrics.get("spans") or 0),
-                    int(metrics.get("bytes") or 0),
-                )
-            ],
-            _PROGRESS_DDL,
-        )
-        .withColumn("updated_at", F.lit(run_ts).cast("timestamp"))
-        .coalesce(1)
+    write_table(
+        _milestone_row(spark, run_id, run_ts, f"stage:{stage}", metrics or {}),
+        progress_loc,
+        mode="append",
     )
-    write_table(row, progress_loc, mode="append")
 
 
 def completed_stages(spark: SparkSession, progress_loc: str, run_id: str) -> set[str]:
     """Names of stages already marked complete for this run (empty set when
     no progress exists yet). Stage rows never collide with the bucket-level
     ``done`` resume filter (distinct status prefix)."""
-    try:
-        prog = read_table(spark, progress_loc)
-    except Exception:
+    prog = _run_progress(spark, progress_loc, run_id)
+    if prog is None:
         return set()
     rows = (
-        prog.filter(
-            (F.col("run_id") == run_id) & F.col("status").startswith("stage:")
-        )
+        prog.filter(F.col("status").startswith("stage:"))
         .select("status")
         .distinct()
         .collect()

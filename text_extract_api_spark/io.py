@@ -13,7 +13,11 @@ catalog+path config, not per-row I/O.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+# what a parquet read of a missing or an empty directory raises
+_ABSENT = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -26,6 +30,14 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def _is_table_ident(spark: SparkSession, location: str) -> bool:
+    return (
+        "://" not in location
+        and "." in location.split("/")[-1]
+        and iceberg_available(spark)
+    )
+
+
 def write_table(
     df: DataFrame,
     location: str,
@@ -34,8 +46,7 @@ def write_table(
 ) -> None:
     """``location`` is either an Iceberg table identifier (``cat.db.tbl``)
     or a filesystem path (fallback)."""
-    spark = df.sparkSession
-    if "://" not in location and "." in location.split("/")[-1] and iceberg_available(spark):
+    if _is_table_ident(df.sparkSession, location):
         writer = df.writeTo(location)
         (writer.append() if mode == "append" else writer.createOrReplace())
         return
@@ -46,9 +57,25 @@ def write_table(
 
 
 def read_table(spark: SparkSession, location: str) -> DataFrame:
-    if "://" not in location and "." in location.split("/")[-1] and iceberg_available(spark):
+    if _is_table_ident(spark, location):
         return spark.read.table(location)
     return spark.read.parquet(location)
+
+
+def table_exists(spark: SparkSession, location: str) -> bool:
+    """Whether ``location`` holds a table yet. Only a missing or empty
+    directory reads as absent; any other read error (a corrupt file, a
+    permission or IO failure) propagates, so a caller never mistakes a
+    broken table for "no rows yet"."""
+    if _is_table_ident(spark, location):
+        return spark.catalog.tableExists(location)
+    try:
+        spark.read.parquet(location)
+    except AnalysisException as e:
+        if e.getCondition() in _ABSENT:
+            return False
+        raise
+    return True
 
 
 def write_bucketed(
@@ -75,14 +102,6 @@ def write_bucketed(
         .bucketBy(n_buckets, bucket_col)
         .sortBy(bucket_col)
         .saveAsTable(table_name)
-    )
-
-
-def _is_table_ident(spark: SparkSession, location: str) -> bool:
-    return (
-        "://" not in location
-        and "." in location.split("/")[-1]
-        and iceberg_available(spark)
     )
 
 

@@ -60,7 +60,7 @@ def get_spark(
         # ZSTD shuffle/broadcast/spill compression (r4, measured): cuts the
         # flagship job's shuffled bytes 579→244 MB (2.37×) with task CPU
         # flat and wall never worse in an interleaved lz4/zstd A/B
-        # (tools/codec_ab.py, BASELINE.md r4). Shuffled bytes are the
+        # (BENCH/BASELINE.md, r4). Shuffled bytes are the
         # scaling currency — DRAM-bus sharing is the N→4N residual on
         # multi-tenant hosts, and at 100 TB they are real network/disk.
         .config("spark.io.compression.codec", "zstd")

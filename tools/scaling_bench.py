@@ -53,7 +53,7 @@ SHUFFLE_PARTITIONS = 64  # fixed across levels: parallelism must come from
 # (unpinned local[2] borrowed idle cores via GC/Python/commit threads and
 # understated the ratio).
 # r4-zstd = engine default shuffle codec switched lz4→zstd (session.py):
-# shuffled bytes fall 2.37× at flat task CPU (tools/codec_ab.py) — a
+# shuffled bytes fall 2.37× at flat task CPU (BENCH/BASELINE.md) — a
 # measurement-relevant change, so pairs pool separately from r3-slim.
 METHOD = "r4-zstd-pinned" + (
     f"-x{MULTIPLIER}" if MULTIPLIER != 16 else ""
@@ -292,7 +292,7 @@ def main() -> None:
     # headline numbers never mix setups — but pairs from prior methods
     # remain evidence about the PLAN's scaling whenever the change was
     # measured work-neutral (the r3→r4 bump is the zstd shuffle codec:
-    # 2.37x fewer shuffled bytes at flat task CPU, tools/codec_ab.py),
+    # 2.37x fewer shuffled bytes at flat task CPU, BENCH/BASELINE.md),
     # so the table below keeps them visible instead of silently resetting
     # the sample to the newest epoch.
     by_method: dict[str, dict[str, list]] = {}
@@ -367,8 +367,8 @@ mid-run contamination kept in): median {quiet_median:.3f},
 
 **Cross-method history** (all recorded epochs of this experiment; the
 method key bumps on setup changes so pooled headlines never mix setups —
-the r3→r4 bump is the zstd shuffle codec, measured work-neutral by
-`tools/codec_ab.py`: 2.37× fewer shuffled bytes at flat task CPU, so
+the r3→r4 bump is the zstd shuffle codec, measured work-neutral by an
+interleaved lz4/zstd A/B: 2.37× fewer shuffled bytes at flat task CPU, so
 earlier pairs remain evidence about the plan's scaling behavior):
 
 {history_table}
