@@ -3212,7 +3212,7 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("doc_id") / WARC_SEG_DOCS).cast("long").alias("seg"),
     )
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         seg = int(key[0])
         recs = []
         for _, row in pdf.sort_values("doc_id").iterrows():
@@ -5266,7 +5266,9 @@ FROM documents
         # Spark recovers the pages from real PDF bytes (deflate → object
         # graph → operator scan); the oracle re-paginates the source text
         # the parser's output is framed-layout-independent, so the oracle
-        # re-derives every field from the source table directly
+        # re-derives every field from the source table directly; byte_len
+        # is strlen (UTF-8 bytes, as Spark's length on binary), not
+        # length (characters)
         "warc_ingest": f"""
 SELECT CAST(doc_id // {WARC_SEG_DOCS} AS VARCHAR) AS segment,
        CAST(row_number() OVER (
@@ -5275,7 +5277,7 @@ SELECT CAST(doc_id // {WARC_SEG_DOCS} AS VARCHAR) AS segment,
        'http://example.com/doc/' || CAST(doc_id AS VARCHAR) AS url,
        CAST(200 AS INT) AS status,
        CASE WHEN doc_id % 2 = 0 THEN 'text/html' ELSE 'text/plain' END AS mime,
-       CAST(length(CASE WHEN doc_id % 2 = 0
+       CAST(strlen(CASE WHEN doc_id % 2 = 0
             THEN '<html><body><p>' || text || '</p></body></html>'
             ELSE text END) AS BIGINT) AS byte_len,
        md5(CASE WHEN doc_id % 2 = 0

@@ -169,3 +169,50 @@ def test_office_and_quarantine_legs(spark, sf_dir):
                     )
     assert hit > 0
     validated.unpersist()
+
+
+def test_every_leg_runs_on_every_core(spark):
+    """The extraction legs are union children. Left to AQE's coalescing,
+    they split its minimum parallelism between them and each ran one task,
+    so one core parsed every html row. The pipeline puts one
+    explicit-count exchange under the legs; the extraction stage (the
+    job group's largest) must run more tasks than there can be legs.
+    A media-less pdf span still extracts to '' and keeps its media_ref."""
+    from text_extract_api_spark.registry import default_registry
+    from text_extract_api_spark.schema import DOCS_INTERLEAVED_SCHEMA
+
+    rows = [
+        (
+            f"h{i:04d}",
+            [("html", f"<html><body><p>doc {i} part {j}</p></body></html>", "", j)
+             for j in range(3)]
+            + [("text", f"plain {i}", "", 3)],
+        )
+        for i in range(400)
+    ] + [("p0000", [("pdf", "", "pdf://p0000", 0)])]
+    docs = spark.createDataFrame(rows, DOCS_INTERLEAVED_SCHEMA)
+    results, _ = run_extract_pipeline(spark, docs, None, None, "legs")
+    max_legs = 1 + sum(s.leg_fn is not None for s in default_registry().strategies())
+
+    sc = spark.sparkContext
+    sc.setJobGroup("every_leg_every_core", "extraction stage task counts")
+    try:
+        got = _collect_flat(
+            results.select("doc_id", F.explode("spans").alias("s")).select(
+                "doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"
+            )
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    task_counts = [
+        tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup("every_leg_every_core")
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    ]
+    assert max(task_counts) > max_legs, task_counts
+
+    assert len(got) == 401
+    assert got["h0007"][1] == ("html", "doc 7 part 1", "", 1)
+    assert got["p0000"] == [("pdf", "", "pdf://p0000", 0)]

@@ -105,3 +105,29 @@ def test_distributed_operator_layout_independence(spark):
         )
     assert sorted(by_seg["plain"]) == sorted(by_seg["gz"])
     assert len(by_seg["plain"]) == 3
+
+
+@pytest.mark.parametrize("doc_id", [0, 1])
+def test_warc_ingest_oracle_counts_body_bytes(doc_id):
+    """The oracle's byte_len is the record body's byte count (what the
+    engine measures on the parsed binary body), not its character count."""
+    import hashlib
+
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry
+
+    text = "naïve café — 東京 😀"
+    documents = pd.DataFrame({"doc_id": [doc_id], "text": [text]})  # noqa: F841
+    con = duckdb.connect()
+    row = con.execute(entry.oracle_sql()["warc_ingest"]).fetchone()
+    body = (
+        f"<html><body><p>{text}</p></body></html>" if doc_id % 2 == 0 else text
+    ).encode()
+    url = f"http://example.com/doc/{doc_id}"
+    (parsed,) = parse_warc(make_warc([(url, body, "text/plain")]))
+    assert parsed["body"] == body
+    byte_len, body_md5 = row[5], row[6]
+    assert byte_len == len(body)
+    assert body_md5 == hashlib.md5(body).hexdigest()

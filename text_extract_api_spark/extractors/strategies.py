@@ -94,12 +94,12 @@ def html_markdown(config: dict | None = None) -> ExtractorStrategy:
 def pdf_pages(config: dict | None = None) -> ExtractorStrategy:
     config = config or {}
 
-    def leg(flat_slice: DataFrame, ctx: dict, cfg: dict) -> DataFrame:
+    def leg(flat_slice: DataFrame, ctx: dict, cfg: dict) -> DataFrame | None:
         from ..pipeline import pdf_page_texts
 
         media_pages = ctx.get("media_pages")
         if media_pages is None:
-            return flat_slice.withColumn("extracted", F.lit(""))
+            return None  # decline: kinds fall through to the default '' leg
         pages = pdf_page_texts(media_pages, cfg.get("page_sep"))
         # merge hint: page-store size scales with the corpus but derived
         # lineage hides that from the static planner; AQE re-plans small

@@ -19,13 +19,23 @@ Scale properties (the part that matters at 10^12 docs):
   representative row per ``content_hash`` and fans back with an equi-join —
   the batch generalization of the reference's cross-request Redis
   memoization. Duplicate-heavy corpora do proportionally less work.
-- **span arrays never ride a content_hash exchange** (r3): the cache probe,
-  rep-dedup, and fan-back all shuffle only ``(doc_id, content_hash)``;
-  arrays are reattached via one doc_id-aligned join (exchange-free on the
-  heavy side for doc_id-partitioned input) and the single irreducible
-  full-array shuffle is the reassemble over the *extracted* spans. AQE
-  coalesces/splits partitions at runtime; cache joins broadcast
-  automatically when the cache side is small.
+- **span arrays never ride a content_hash exchange before dedup** (r3):
+  the cache probe, rep-dedup, and fan-back all shuffle only
+  ``(doc_id, content_hash)``; arrays are reattached via one doc_id-aligned
+  join (exchange-free on the heavy side for doc_id-partitioned input).
+  Only the *representative* span arrays move by content_hash: once
+  through one explicit-count exchange under the extraction legs, and once
+  more as the reassemble over the *extracted* spans.
+- **every leg runs on every core**: that exchange under the legs has
+  ``spark.sql.shuffle.partitions`` partitions, fixed, not AQE-sized. AQE
+  coalesces each union child as its own group and splits its minimum
+  parallelism between them by input size; legs reading the rep-join
+  exchanges directly got one task each, and shuffle bytes (compressed
+  text) say nothing about a leg's Python cost. AQE never coalesces an
+  explicit-count repartition, and all legs reuse the one exchange, so the
+  rep join runs once. Elsewhere AQE coalesces/splits partitions at
+  runtime; cache joins broadcast automatically when the cache side is
+  small.
 - **no per-row Python**: text/markdown/pii/pdf paths are whole-stage
   codegen; only HTML crosses into an Arrow-batched pandas UDF, and only
   HTML *rows* pay for it (non-html rows pass '' through the batch).
@@ -111,9 +121,9 @@ def extract_spans_flat(
       filtered: 2.0 s). For the pdf join leg it avoids shuffling non-pdf
       rows (media_ref '' — a maximally hot key) through the join — a
       textbook skew bug at scale. A leg_fn may decline (return None, e.g. no
-      office blob store supplied) — its kinds then fall to the default leg:
-      a corpus without office media must not pay an extra consumer pass over
-      the upstream exchange.
+      page store or office blob store supplied) — its kinds then fall to
+      the default leg: a corpus without media must not pay an extra
+      consumer pass over the upstream exchange.
     - all **column_fn strategies** (text, markdown, pii_text) fuse into ONE
       pure-JVM when-chain leg, whole-stage codegen, unclaimed kinds → ''.
 
@@ -249,9 +259,19 @@ def run_extract_pipeline(
     reps = rep_ids.hint("merge").join(
         docs_h.select("doc_id", "spans"), "doc_id", "inner"
     )
-    rep_flat = reps.select(
-        F.col("content_hash").alias("key"), F.explode("spans").alias("s")
-    ).select("key", "s.kind", "s.text", "s.media_ref", "s.offset")
+    # ONE explicit-count exchange under the legs, so every leg runs
+    # shuffle.partitions tasks (module docstring: "every leg runs on every
+    # core"). It sits BEFORE the explode: the optimizer pushes each leg's
+    # kind filter through a repartition (one exchange per leg, each
+    # re-running the rep join) but not through the explode that makes
+    # ``kind``, so all legs reuse this exchange and the rep join runs once.
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    rep_flat = (
+        reps.select(F.col("content_hash").alias("key"), "spans")
+        .repartition(n_parts, "key")
+        .select("key", F.explode("spans").alias("s"))
+        .select("key", "s.kind", "s.text", "s.media_ref", "s.offset")
+    )
 
     rep_out = _reassemble(
         extract_spans_flat(rep_flat, media_pages, office_blobs, registry),

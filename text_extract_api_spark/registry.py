@@ -16,8 +16,8 @@ strategy is either
 - or a ``leg_fn`` — a builder that takes the pre-filtered slice of flat
   spans for its kinds plus a context dict (media/blob side tables) and
   returns the slice with an ``extracted`` column (the filtered-Arrow-leg /
-  join legs). Returning ``None`` declines (e.g. no blob store supplied) and
-  the kinds fall through to the default '' leg.
+  join legs). Returning ``None`` declines (e.g. no page or blob store
+  supplied) and the kinds fall through to the default '' leg.
 
 Per-strategy YAML config (the reference's ``set_strategy_config``,
 ``strategy.py:21-22``) is passed to the factory and captured in the closure

@@ -52,10 +52,11 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # AQE coalesce defaults (parallelismFirst=true, 64 MB advisory) kept
-        # deliberately: the heavy extraction stage then runs ~1 task/core
-        # with large Arrow streams. A measured experiment with 16 MB +
-        # parallelismFirst=false (≈4 tasks/core to amortize stragglers) ran
-        # 25-35% SLOWER at local[8] — per-task Python-worker handoff and
+        # deliberately. They do NOT size the extraction stage: its legs read
+        # one explicit-count exchange (pipeline.run_extract_pipeline), which
+        # AQE never coalesces, so each leg runs shuffle.partitions tasks. A
+        # measured experiment with 16 MB + parallelismFirst=false ran 25-35%
+        # SLOWER at local[8] — per-task Python-worker handoff and
         # exchange-read overhead outweigh tail smoothing at this batch size.
         # ZSTD shuffle/broadcast/spill compression (r4, measured): cuts the
         # flagship job's shuffled bytes 579→244 MB (2.37×) with task CPU
