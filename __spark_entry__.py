@@ -40,12 +40,7 @@ from text_extract_api_spark.functions.dedup import (
     LSH_ROWS,
     SIMHASH_BITS,
 )
-from text_extract_api_spark.extractors.media import (
-    image_metadata,
-    sample_frames,
-    FRAME_EVERY_N,
-    FRAME_MAX,
-)
+from text_extract_api_spark.extractors.media import image_metadata
 from text_extract_api_spark.functions.similarity import (
     _dot,
     _norm,
@@ -767,44 +762,6 @@ FROM scored s LEFT JOIN th t USING (lang)
 """.strip()
 
 
-def _phash_neardup_sql() -> str:
-    """media_phash_neardup oracle: brute-force all distinct-payload pairs
-    and filter Hamming ≤ PHASH_MAX_HAMMING — stronger than replaying the
-    banding, it PROVES the band pigeonhole loses no pair."""
-    from text_extract_api_spark.extractors.media import (
-        PHASH_BITS,
-        PHASH_MAX_HAMMING,
-    )
-
-    bit = lambda h, b: (  # noqa: E731
-        f"CASE WHEN strpos('89abcdef', substring({h}, {b + 1}, 1)) > 0 "
-        f"THEN '1' ELSE '0' END"
-    )
-    sig = lambda h: " || ".join(bit(h, b) for b in range(PHASH_BITS))  # noqa: E731
-    ham = " + ".join(
-        f"CASE WHEN substring(a.sig, {i + 1}, 1) = substring(b.sig, {i + 1}, 1) "
-        f"THEN 0 ELSE 1 END"
-        for i in range(PHASH_BITS)
-    )
-    return f"""
-WITH {SYNTH_CTE},
-{MEDIA_CTE},
-digests AS (SELECT media_ref, page_no, md5(page_text) AS h FROM pages),
-reps AS (
-  SELECT h, media_ref, page_no, {sig('h')} AS sig FROM (
-    SELECT h, media_ref, page_no,
-           row_number() OVER (PARTITION BY h ORDER BY media_ref, page_no) AS rn
-    FROM digests
-  ) WHERE rn = 1
-)
-SELECT a.media_ref AS ref_a, CAST(a.page_no AS INT) AS page_a,
-       b.media_ref AS ref_b, CAST(b.page_no AS INT) AS page_b,
-       CAST(({ham}) AS INT) AS hamming
-FROM reps a JOIN reps b ON a.h < b.h
-WHERE ({ham}) <= {PHASH_MAX_HAMMING}
-""".strip()
-
-
 def _ann_ivf_sql() -> str:
     cos_ec = (
         f"round(({_vec_dot_sql('e.embedding', 'c.embedding')}) / "
@@ -1029,34 +986,6 @@ FROM pages WHERE substring(md5(page_text), 1, 1) = 'f'
 """.strip()
 
 
-_IMG_PDF_EXPR = (
-    "'PDFSTUB:' || md5(page_text) || ':' || CAST(length(page_text) AS VARCHAR)"
-)
-
-
-def _image_to_pdf_sql() -> str:
-    return f"""
-WITH {SYNTH_CTE},
-{MEDIA_CTE}
-SELECT media_ref, CAST(page_no AS INT) AS page_no,
-       md5({_IMG_PDF_EXPR}) AS pdf_md5,
-       CAST(length({_IMG_PDF_EXPR}) AS BIGINT) AS pdf_len
-FROM pages
-""".strip()
-
-
-def _image_unify_sql() -> str:
-    return f"""
-WITH {SYNTH_CTE},
-{MEDIA_CTE}
-SELECT media_ref, CAST(page_no AS INT) AS page_no,
-       md5('JPEGSTUB:' || md5(page_text)) AS unified_md5,
-       CAST(length('JPEGSTUB:' || md5(page_text)) AS BIGINT) AS unified_len,
-       'RGB' AS mode
-FROM pages
-""".strip()
-
-
 def _binary_sniff_sql() -> str:
     # Re-derives the sniff from the constructed payload prefix (string form
     # for ASCII magics, hex marker for the true-binary JPEG/PNG magics) —
@@ -1101,60 +1030,6 @@ f AS (
 SELECT doc_id, fmt,
        CASE WHEN fmt IN ('png', 'jpeg', 'gif') THEN 'image' ELSE fmt END AS kind
 FROM f
-""".strip()
-
-
-def _media_resize_sql() -> str:
-    w = f"(64 + ({_hexval_sql('h', 1)} * 16 + {_hexval_sql('h', 2)}) % 192)"
-    hgt = f"(64 + ({_hexval_sql('h', 3)} * 16 + {_hexval_sql('h', 4)}) % 192)"
-    return f"""
-WITH {SYNTH_CTE},
-{MEDIA_CTE},
-meta AS (
-  SELECT media_ref, CAST(page_no AS INT) AS page_no, md5(page_text) AS h,
-         {w} AS w, {hgt} AS ht
-  FROM pages
-),
-dims AS (
-  SELECT media_ref, page_no, h,
-         GREATEST(1, (w * 64) // GREATEST(w, ht)) AS ow,
-         GREATEST(1, (ht * 64) // GREATEST(w, ht)) AS oh
-  FROM meta
-)
-SELECT media_ref, page_no, CAST(ow AS INT) AS out_width, CAST(oh AS INT) AS out_height,
-       md5('RESIZESTUB:' || h || ':' || CAST(ow AS VARCHAR) || 'x' || CAST(oh AS VARCHAR)) AS resized_md5
-FROM dims
-""".strip()
-
-
-def _media_audio_sql() -> str:
-    rate = f"([8000, 16000, 44100, 48000])[CAST({_hexval_sql('h', 1)} % 4 AS INT) + 1]"
-    chan = f"1 + {_hexval_sql('h', 2)} % 2"
-    loud = (
-        f"-6000 + ({_hexval_sql('h', 3)} * 4096 + {_hexval_sql('h', 4)} * 256 + "
-        f"{_hexval_sql('h', 5)} * 16 + {_hexval_sql('h', 6)}) % 5400"
-    )
-    return f"""
-WITH {SYNTH_CTE},
-{MEDIA_CTE}
-SELECT media_ref, CAST(page_no AS INT) AS page_no,
-       CAST((length(page_text) * 1000) // 16000 AS BIGINT) AS duration_ms,
-       CAST({rate} AS INT) AS sample_rate,
-       CAST({chan} AS INT) AS n_channels,
-       CAST({loud} AS BIGINT) AS loudness_x100
-FROM (SELECT media_ref, page_no, page_text, md5(page_text) AS h FROM pages)
-""".strip()
-
-
-def _media_frames_sql() -> str:
-    n = f"LEAST({FRAME_MAX}, GREATEST(1, length(page_text) // {FRAME_EVERY_N}))"
-    return f"""
-WITH {SYNTH_CTE},
-{MEDIA_CTE}
-SELECT media_ref, CAST(page_no AS INT) AS page_no,
-       CAST(f.frame_no AS INT) AS frame_no,
-       md5(page_text || ':' || CAST(f.frame_no AS VARCHAR)) AS frame_md5
-FROM pages CROSS JOIN UNNEST(range({n})) AS f(frame_no)
 """.strip()
 
 
@@ -3008,17 +2883,6 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_scores(_docs(spark, sf_dir), F.col("source") == "src1")
 
 
-def q_media_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal near-dup: perceptual-hash Hamming pairs over image
-    payloads (stub DCT hash; see media.phash_bits_col). Exact dups collapse
-    before banding; the band pigeonhole gives exact recall at the Hamming
-    threshold (max_hamming < n_bands) —
-    the oracle brute-forces all distinct-payload pairs and must agree."""
-    from text_extract_api_spark.extractors.media import phash_neardups
-
-    return phash_neardups(_media(spark, sf_dir))
-
-
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF over the prebuilt cell-partitioned store (assignment computed
     once at build time; the r1 design re-assigned the corpus per query).
@@ -3245,38 +3109,6 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("body").cast("bigint").alias("byte_len"),
         F.md5("body").alias("body_md5"),
     )
-
-
-def q_image_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C3: image→PDF converter (converters/image_to_pdf.py:12-27), stub-
-    backed with a value-level oracle on the emitted bytes."""
-    from text_extract_api_spark.extractors.media import image_to_pdf
-
-    return image_to_pdf(_media(spark, sf_dir))
-
-
-def q_image_unify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4: image unification to RGB/JPEG (image.py:38-40,52-71), stub-backed."""
-    from text_extract_api_spark.extractors.media import unify_images
-
-    return unify_images(_media(spark, sf_dir))
-
-
-def q_media_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize leg of the media checklist (longest-edge thumbnail, integer
-    aspect-preserving scaling); stubbed codec, value-level oracle."""
-    from text_extract_api_spark.extractors.media import resize_images
-
-    return resize_images(_media(spark, sf_dir))
-
-
-def q_media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio feature-extraction plumbing (duration/rate/channels/loudness),
-    stubbed codec, value-level oracle — same batch shape a real
-    soundfile/librosa decode would use."""
-    from text_extract_api_spark.extractors.media import audio_features
-
-    return audio_features(_media(spark, sf_dir))
 
 
 def q_base64_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3585,10 +3417,6 @@ def q_binary_ingest_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(build, "doc_id long, content binary")
     )
     return ingest_binary(plain.unionByName(office)).select("doc_id", "fmt", "kind")
-
-
-def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sample_frames(_media(spark, sf_dir))
 
 
 OFFICE_CHUNK = 150
@@ -4472,14 +4300,7 @@ def _last_green_rounds() -> dict[str, int]:
 # no longer certifies the current code, so they outrank stable-green
 # entries in the window (but stay behind never-checked registrations).
 # Update this list whenever an operator's semantics/plan change in-round.
-_CHANGED_THIS_ROUND: tuple[str, ...] = (
-    "quality_classifier",      # DECIMAL(38) gradient promotion (r4 verdict #2)
-    "ccnet_ppl_buckets",       # approx-percentile scale mode (r4 verdict #3)
-    "quality_percentile_gate",  # approx-percentile scale mode (r4 verdict #3)
-    "media_image_metadata",    # real stdlib header parsers (r4 verdict #4)
-    "media_quarantine",        # quarantine now driven by real header validity
-    "neardup_clusters",        # single-action convergence check (r4 verdict #8)
-)
+_CHANGED_THIS_ROUND: tuple[str, ...] = ()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -4512,7 +4333,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "holdout_split": q_holdout_split,
         "dsir_select": q_dsir_select,
         "ccnet_ppl_buckets": q_ccnet_ppl_buckets,
-        "media_phash_neardup": q_media_phash_neardup,
         "bpe_apply": q_bpe_apply,
         "kl_drift": q_kl_drift,
         "quality_classifier": q_quality_classifier,
@@ -4537,10 +4357,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quota_per_source": q_quota_per_source,
         "shard_assign": q_shard_assign,
         "corpus_prep_e2e": q_corpus_prep_e2e,
-        # brand-new final-wave ops (never checked anywhere) take the slots
-        # image_unify / media_image_resize / events_sessionize held (all
-        # r2-green, code unchanged 2 rounds; the media family stays
-        # represented in-window by media_phash_neardup)
+        # brand-new final-wave ops (never checked anywhere) take the slot
+        # events_sessionize held (r2-green, code unchanged 2 rounds)
         "decontaminate_bloom": q_decontaminate_bloom,
         "anchor_text_agg": q_anchor_text_agg,
         "html_outlinks": q_html_outlinks,
@@ -4571,14 +4389,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # shape having been green in r3 -----------------------------------
         "pipeline_extract_flat": q_pipeline_extract_flat,
         "pipeline_extract_office": q_pipeline_extract_office,
-        "image_unify": q_image_unify,
-        "media_image_resize": q_media_image_resize,
         "events_sessionize": q_events_sessionize,
         "tpch_q1_pricing_summary": q_tpch_q1_pricing_summary,
         "tpch_q5_local_supplier": q_tpch_q5_local_supplier,
         "top_events_per_user": q_top_events_per_user,
         "events_props_extract": q_events_props_extract,
-        "media_audio_features": q_media_audio_features,
         "tpch_q3_top_orders": q_tpch_q3_top_orders,
         "tpch_q6_revenue": q_tpch_q6_revenue,
         "events_hourly_rollup": q_events_hourly_rollup,
@@ -4612,9 +4427,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_jaccard_pairs": q_dedup_jaccard_pairs,
         "dedup_exact_payload": q_dedup_exact_payload,
         "media_quarantine": q_media_quarantine,
-        "image_to_pdf": q_image_to_pdf,
         "media_image_metadata": q_media_image_metadata,
-        "media_frame_sample": q_media_frame_sample,
         "route_dispatch": q_route_dispatch,
         "content_hash": q_content_hash,
         "cache_anti_join": q_cache_anti_join,
@@ -5016,7 +4829,6 @@ FROM agg WHERE end_ts <= (SELECT w FROM wm)
         "kl_drift": kl_drift_sql("doc_id % 2 = 0"),
         "quality_classifier": _quality_classifier_sql(),
         "ccnet_ppl_buckets": _ccnet_buckets_sql(),
-        "media_phash_neardup": _phash_neardup_sql(),
         "quality_c4_rules": _c4_sql(),
         "semdedup_kmeans": _semdedup_sql(),
         "prune_prototypes": _prototypes_sql(),
@@ -5294,12 +5106,7 @@ FROM documents,
        AS t(k)
 WHERE length(text) > 0
 """.strip(),
-        "media_frame_sample": _media_frames_sql(),
         "media_quarantine": _media_quarantine_sql(),
-        "image_to_pdf": _image_to_pdf_sql(),
-        "image_unify": _image_unify_sql(),
-        "media_image_resize": _media_resize_sql(),
-        "media_audio_features": _media_audio_sql(),
         "binary_ingest_sniff": _binary_sniff_sql(),
         "pdf_markdown_structuring": f"""
 WITH {SYNTH_CTE},

@@ -58,7 +58,6 @@ HEADLINE = [
     "dsir_select",
     "kl_drift",
     "quality_classifier",
-    "media_phash_neardup",
     "corpus_datacard",
     "neardup_keep_best",
     "bpe_train_merges",

@@ -7,8 +7,6 @@ import os
 from pyspark.sql import functions as F
 
 from text_extract_api_spark.extractors.media import (
-    img_to_pdf_bytes,
-    unify_image_bytes,
     validate_images,
     verify_image,
 )
@@ -117,16 +115,6 @@ def test_validate_images_quarantine_split(spark):
     assert got["m2"]["valid"] is expect_valid
 
 
-def test_converter_stubs_roundtrip():
-    p = b"some image bytes"
-    import hashlib
-
-    pdf = img_to_pdf_bytes(p)
-    assert pdf.startswith(b"PDFSTUB:") and hashlib.md5(p).hexdigest().encode() in pdf
-    uni = unify_image_bytes(p)
-    assert uni.startswith(b"JPEGSTUB:")
-
-
 def test_storage_list_delete(spark, tmp_path):
     base = str(tmp_path / "warehouse")
     df = spark.range(5).select(F.col("id"))
@@ -209,25 +197,6 @@ def test_raw_files_job_end_to_end(spark, tmp_path):
     assert rows["memo.docx"]["text"] == "Alpha Beta"
     assert "ANONYMIZED" in rows["notes.txt"]["text"]
     assert "555" not in rows["notes.txt"]["text"]
-
-
-def test_resize_stub_integer_scaling():
-    """Longest edge lands exactly on the target (integer math — float scale
-    factors truncate differently across engines at exact multiples)."""
-    import hashlib
-
-    from text_extract_api_spark.extractors.media import (
-        decode_image,
-        resize_image_bytes,
-    )
-
-    for payload in (b"a", b"payload two", b"x" * 100):
-        w, h, _ = decode_image(payload)
-        ow, oh, data = resize_image_bytes(payload, target=64)
-        assert max(ow, oh) == 64  # longest edge hits the target exactly
-        assert 1 <= min(ow, oh) <= 64
-        assert data.startswith(b"RESIZESTUB:")
-        assert hashlib.md5(payload).hexdigest().encode() in data
 
 
 def test_sniff_survives_poison_bytes(spark):

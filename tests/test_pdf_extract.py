@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from text_extract_api_spark.extractors.pdf import (
+    _scan_strings,
     extract_pdf_text,
     make_pdf,
     pdf_text_extract,
@@ -97,6 +98,14 @@ def test_non_text_string_operands_are_not_emitted():
         b"trailer\n<< /Root 4 0 R >>\n%%EOF\n"
     )
     assert extract_pdf_text(pdf) == ["shownalso shown"]
+
+
+def test_name_operand_spelling_a_show_operator_is_not_one():
+    # /Tj and /TJ are name operands (e.g. of gs or BMC), not text-show
+    # operators: the strings before them are consumed by the real operator
+    # that follows, and only the last string is shown
+    assert _scan_strings(b"BT (drop) /Tj gs (keep) Tj ET") == ["keep"]
+    assert _scan_strings(b"BT (a) /TJ BMC (b) Tj EMC ET") == ["b"]
 
 
 @pytest.mark.parametrize("compress", [True, False])

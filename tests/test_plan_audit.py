@@ -68,12 +68,6 @@ BOUNDS = {
     # pattern as quality_unigram_logppl's 13); the per-language threshold
     # table rides one of the 5 broadcasts
     "ccnet_ppl_buckets": (29, 0, 0, True),
-    # 15 STATIC: synth scaffolding that BUILDS the interleaved table
-    # locally replays under both self-join sides (AQE reuse; production
-    # reads the Iceberg media table directly); the operator's own
-    # exchanges are the reps groupBy(h), the band equi-join, and the
-    # pair distinct
-    "media_phash_neardup": (15, 0, 0, True),
     # 1 = the input-split repartition; the rules themselves are row-local
     "quality_gopher_rules": (1, 0, 0, False),
     # 2 = repartition + the single strata-sized groupBy(lang, source);
@@ -118,7 +112,7 @@ BOUNDS = {
     "interleave_stats": (5, 0, 0, True),
     # 12 STATIC: the flat-synth scaffold (repart + dup-redirect join)
     # replays under the distinct-count subtree AND the base side of the
-    # fp join (identical exchanges → AQE reuse, the media_phash lesson);
+    # fp join (identical exchanges → AQE reuse, as in ccnet_ppl_buckets);
     # the operator's own exchanges are count_distinct's two agg levels,
     # the fp join re-exchange (32-byte hash keys), and the groupBy(doc_id)
     # reassembly — whose partial-agg buffers carry each kept piece once

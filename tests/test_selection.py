@@ -1,15 +1,11 @@
-"""DSIR importance selection, CCNet buckets, and phash near-dup tests."""
+"""Selection and sampling tests: DSIR importance, CCNet buckets, BPE, KL
+drift, the quality classifier, soft sampling and token quotas."""
 from __future__ import annotations
 
 import hashlib
 
 from pyspark.sql import functions as F
 
-from text_extract_api_spark.extractors.media import (
-    PHASH_BITS,
-    PHASH_MAX_HAMMING,
-    phash_neardups,
-)
 from text_extract_api_spark.functions.quality import ccnet_buckets
 from text_extract_api_spark.functions.selection import dsir_scores
 
@@ -70,53 +66,6 @@ def test_ccnet_buckets_terciles_and_empty(spark):
     assert all(
         out[i]["ppl_bucket"] in ("head", "middle", "tail") for i in range(9)
     )
-
-
-def _phash(payload: bytes) -> str:
-    h = hashlib.md5(payload).hexdigest()
-    return "".join("1" if h[b] in "89abcdef" else "0" for b in range(PHASH_BITS))
-
-
-def test_phash_neardups_matches_bruteforce(spark):
-    # 60 distinct payloads + byte-identical duplicates of the first 10.
-    payloads = [f"img-{i}".encode() for i in range(60)]
-    rows = [(f"m{i}", 1, p) for i, p in enumerate(payloads)]
-    rows += [(f"dup{i}", 2, payloads[i]) for i in range(10)]
-    media = spark.createDataFrame(
-        rows, "media_ref string, page_no int, payload binary"
-    )
-    got = {
-        (r["ref_a"], r["page_a"], r["ref_b"], r["page_b"], r["hamming"])
-        for r in phash_neardups(media).collect()
-    }
-    # Brute force over distinct payloads: representative = lexicographic min
-    # (media_ref, page_no) per payload; pairs ordered by md5.
-    reps = {}
-    for ref, page, p in rows:
-        h = hashlib.md5(p).hexdigest()
-        if h not in reps or (ref, page) < reps[h][:2]:
-            reps[h] = (ref, page, _phash(p))
-    want = set()
-    items = sorted(reps.items())  # ordered by md5 hex = the h_a < h_b order
-    for i in range(len(items)):
-        for j in range(i + 1, len(items)):
-            (_, (ra, pa, sa)), (_, (rb, pb, sb)) = items[i], items[j]
-            d = sum(x != y for x, y in zip(sa, sb))
-            if d <= PHASH_MAX_HAMMING:
-                want.add((ra, pa, rb, pb, d))
-    assert want, "test corpus must contain near-dup pairs"
-    # banding recall is exact for hamming < n_bands (pigeonhole)
-    assert got == want
-
-
-def test_phash_exact_dups_collapse_to_one_rep(spark):
-    # Two byte-identical payloads never emit a pair (hamming 0 is a
-    # duplicate, not a near-duplicate pair between distinct payloads).
-    media = spark.createDataFrame(
-        [("a", 1, b"same"), ("b", 1, b"same")],
-        "media_ref string, page_no int, payload binary",
-    )
-    assert phash_neardups(media).count() == 0
 
 
 def test_bpe_apply_hand_cases(spark):

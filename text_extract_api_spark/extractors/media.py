@@ -1,16 +1,19 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Image column plumbing: header metadata and validity verdicts.
 
 The reference treats images as opaque bytes routed to external OCR backends
 (``files/file_formats/image.py``, ``extract/strategies/easyocr.py``,
-``ollama.py``); no decode library ships in this container. The engine keeps
-the Spark-side plumbing real — schema, Arrow batching, partition shape —
-and stubs the codec behind ``decode_image`` with a deterministic fake, so
-swapping in PIL/ffmpeg on a real cluster changes one function.
+``ollama.py``); no decode library ships in this container. PNG/GIF/BMP/JPEG
+headers are parsed for real with the stdlib (:func:`parse_image_header`).
+Only two md5-derived fakes remain, and each stays because a real path needs
+a value for payloads no header parser recognizes:
 
-The fakes derive every "decoded" property from md5 of the payload with
-plain hex-digit arithmetic, so the DuckDB oracle can reproduce them exactly
-(``__spark_entry__.py`` media queries) and the full distributed path gets a
-value-level correctness gate, not just a schema check.
+- :func:`decode_image` is ``image_metadata``'s fallback for such payloads
+  (the synthetic corpus's pages are UTF-8 text). The fake dimensions keep
+  the ``media_image_metadata`` oracle value-exact; swapping in PIL on a real
+  cluster changes this one function.
+- :func:`verify_image`'s corrupt slice (md5 starting with ``f``) gives the
+  quarantine path deterministic corrupt rows at any scale; the flagship
+  job's media validation and its quarantine sink depend on them.
 
 All operators here use ``mapInPandas`` (iterator-of-batches) so a partition
 of oversized media never materializes fully in one Python worker — the same
@@ -354,328 +357,4 @@ def validate_media_pages(df: DataFrame) -> DataFrame:
 
     return df.select("media_ref", "page_no", "page_text", "payload").mapInPandas(
         op, VALIDATED_PAGES_SCHEMA
-    )
-
-
-IMG_TO_PDF_SCHEMA = "media_ref string, page_no int, pdf_md5 string, pdf_len long"
-
-
-def img_to_pdf_bytes(payload: bytes) -> bytes:
-    """STUB for the image→PDF converter (reference:
-    converters/image_to_pdf.py:12-27 — PIL re-save as 1-page PDF). The fake
-    emits ASCII bytes derived from the payload so the DuckDB oracle can
-    reproduce the exact output hash; a real deployment swaps this one
-    function for the PIL call."""
-    p = payload or b""
-    return f"PDFSTUB:{hashlib.md5(p).hexdigest()}:{len(p)}".encode()
-
-
-def image_to_pdf(df: DataFrame) -> DataFrame:
-    """(media_ref, page_no, payload) → converted-PDF fingerprint per row
-    (C3). Same filtered-Arrow-leg shape as :func:`image_metadata`."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"].map(lambda b: bytes(b) if b is not None else b"")
-            outs = payloads.map(img_to_pdf_bytes)
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "page_no": pdf["page_no"].astype("int32"),
-                    "pdf_md5": outs.map(lambda b: hashlib.md5(b).hexdigest()),
-                    "pdf_len": outs.map(len).astype("int64"),
-                }
-            )
-
-    return df.select("media_ref", "page_no", "payload").mapInPandas(
-        op, IMG_TO_PDF_SCHEMA
-    )
-
-
-IMG_UNIFY_SCHEMA = (
-    "media_ref string, page_no int, unified_md5 string, unified_len long, mode string"
-)
-
-
-def unify_image_bytes(payload: bytes) -> bytes:
-    """STUB for image unification to RGB/JPEG (reference:
-    image.py:38-40,52-71 — any mode/format → RGB JPEG before OCR). ASCII
-    output derived from the payload, oracle-reproducible."""
-    p = payload or b""
-    return f"JPEGSTUB:{hashlib.md5(p).hexdigest()}".encode()
-
-
-def unify_images(df: DataFrame) -> DataFrame:
-    """(media_ref, page_no, payload) → unified-image fingerprint, mode
-    always 'RGB' (C4 — the reference's OCR pre-normalization)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"].map(lambda b: bytes(b) if b is not None else b"")
-            outs = payloads.map(unify_image_bytes)
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "page_no": pdf["page_no"].astype("int32"),
-                    "unified_md5": outs.map(lambda b: hashlib.md5(b).hexdigest()),
-                    "unified_len": outs.map(len).astype("int64"),
-                    "mode": "RGB",
-                }
-            )
-
-    return df.select("media_ref", "page_no", "payload").mapInPandas(
-        op, IMG_UNIFY_SCHEMA
-    )
-
-
-RESIZE_SCHEMA = (
-    "media_ref string, page_no int, out_width int, out_height int, resized_md5 string"
-)
-
-RESIZE_TARGET = 64  # longest-edge target (thumbnailing convention)
-
-
-def resize_image_bytes(payload: bytes, target: int = RESIZE_TARGET) -> tuple[int, int, bytes]:
-    """STUB for image resize (real impl: PIL ``thumbnail``/``resize`` inside
-    the same batch shape). Output dims preserve the stub-decoded aspect
-    ratio with the longest edge clamped to ``target``; the emitted bytes are
-    ASCII derived from (payload md5, dims) so the DuckDB oracle reproduces
-    the exact output hash."""
-    w, h, _ = decode_image(payload)
-    m = max(w, h)
-    # pure integer scaling: float scale factors truncate differently across
-    # engines at exact-multiple boundaries (64/192*192 → 63.999…)
-    ow = max(1, w * target // m)
-    oh = max(1, h * target // m)
-    digest = hashlib.md5(payload or b"").hexdigest()
-    return ow, oh, f"RESIZESTUB:{digest}:{ow}x{oh}".encode()
-
-
-def resize_images(df: DataFrame, target: int = RESIZE_TARGET) -> DataFrame:
-    """(media_ref, page_no, payload) → resized-image fingerprint + output
-    dims (the 'resize' leg of the media checklist). Same filtered-Arrow-leg
-    shape as :func:`image_metadata`."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"].map(lambda b: bytes(b) if b is not None else b"")
-            outs = payloads.map(lambda p: resize_image_bytes(p, target))
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "page_no": pdf["page_no"].astype("int32"),
-                    "out_width": outs.map(lambda t: t[0]).astype("int32"),
-                    "out_height": outs.map(lambda t: t[1]).astype("int32"),
-                    "resized_md5": outs.map(lambda t: hashlib.md5(t[2]).hexdigest()),
-                }
-            )
-
-    return df.select("media_ref", "page_no", "payload").mapInPandas(op, RESIZE_SCHEMA)
-
-
-AUDIO_FEATURES_SCHEMA = (
-    "media_ref string, page_no int, duration_ms long, sample_rate int, "
-    "n_channels int, loudness_x100 long"
-)
-
-AUDIO_FAKE_BITRATE = 16000  # bytes/sec the stub pretends the payload encodes
-
-
-def audio_features(df: DataFrame) -> DataFrame:
-    """Audio feature-extraction stub: (duration, sample rate, channels,
-    loudness) derived deterministically from the payload (real impl:
-    soundfile/librosa decode inside the same ``mapInPandas`` shape — the
-    container ships no audio codec). Duration scales with payload size;
-    the remaining features come from md5 hex digits, matching the
-    image-metadata stub convention so the oracle checks values."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rates = (8000, 16000, 44100, 48000)
-
-        def feats(p: bytes) -> tuple[int, int, int, int]:
-            h = hashlib.md5(p or b"").hexdigest()
-            duration_ms = len(p) * 1000 // AUDIO_FAKE_BITRATE
-            rate = rates[int(h[0], 16) % 4]
-            channels = 1 + int(h[1], 16) % 2
-            loudness_x100 = -6000 + (int(h[2:6], 16) % 5400)  # [-60, -6) dBFS
-            return duration_ms, rate, channels, loudness_x100
-
-        for pdf in batches:
-            payloads = pdf["payload"].map(lambda b: bytes(b) if b is not None else b"")
-            outs = payloads.map(feats)
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "page_no": pdf["page_no"].astype("int32"),
-                    "duration_ms": outs.map(lambda t: t[0]).astype("int64"),
-                    "sample_rate": outs.map(lambda t: t[1]).astype("int32"),
-                    "n_channels": outs.map(lambda t: t[2]).astype("int32"),
-                    "loudness_x100": outs.map(lambda t: t[3]).astype("int64"),
-                }
-            )
-
-    return df.select("media_ref", "page_no", "payload").mapInPandas(
-        op, AUDIO_FEATURES_SCHEMA
-    )
-
-
-FRAME_SAMPLE_SCHEMA = "media_ref string, page_no int, frame_no int, frame_md5 string"
-
-FRAME_EVERY_N = 10
-FRAME_MAX = 8
-
-
-def sample_frames(
-    df: DataFrame, every_n: int = FRAME_EVERY_N, max_frames: int = FRAME_MAX
-) -> DataFrame:
-    """Video frame-sampling stub: emits deterministic frame fingerprints.
-
-    Real impl: ffmpeg/pyav seek-and-decode inside the same mapInPandas shape
-    (one input row → ≤ max_frames output rows). Frame count scales with
-    payload size (one frame per ``every_n`` bytes, capped); the fingerprint
-    is md5(payload || ':' || frame_no) — reproducible in the SQL oracle.
-    """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "media_ref": [], "page_no": [], "frame_no": [], "frame_md5": []
-            }
-            for ref, page, payload in zip(
-                pdf["media_ref"], pdf["page_no"], pdf["payload"]
-            ):
-                data = bytes(payload) if payload is not None else b""
-                n = min(max_frames, max(1, len(data) // max(1, every_n)))
-                for i in range(n):
-                    rows["media_ref"].append(ref)
-                    rows["page_no"].append(page)
-                    rows["frame_no"].append(i)
-                    rows["frame_md5"].append(
-                        hashlib.md5(data + f":{i}".encode()).hexdigest()
-                    )
-            yield pd.DataFrame(rows)
-
-    return df.select("media_ref", "page_no", "payload").mapInPandas(
-        op, FRAME_SAMPLE_SCHEMA
-    )
-
-
-# ------------------------------------------------ perceptual-hash near-dup
-# 2 bands × 8 bits: with the stub's UNIFORM random bits, each band key has
-# 256 values, so bucket sizes stay ~n/256 and the per-bucket quadratic
-# verify is bounded (4 bands × 4-bit keys measured 12 s at sf0.1 — 16-value
-# buckets collect ~n/16 rows each and the candidate set grows ~n²/64).
-# A real 64-bit DCT phash uses 4×16-bit bands; the stub's space is scaled
-# down only so near-pairs exist in the small test corpora.
-PHASH_BITS = 16
-PHASH_BANDS = 2
-PHASH_MAX_HAMMING = 1  # < PHASH_BANDS ⇒ banding has exact recall (pigeonhole)
-
-
-def phash_bits_col(payload_md5):
-    """16-bit perceptual-hash signature as a '0'/'1' string, derived from the
-    payload digest. STUB for a DCT perceptual hash: the real kernel (decode →
-    grayscale → 32×32 DCT → top-left 8×8 sign bits) is an Arrow batch inside
-    the same ``mapInPandas`` seam as :func:`decode_image` — env-blocked here
-    (no codecs in the container), so bit b instead comes from hex digit b of
-    md5(payload) (1 iff the digit's top bit is set). Every distributed
-    property the real kernel needs — row-local signature extraction, banded
-    candidate join, row-local Hamming verify — is exercised on real values,
-    and the DuckDB oracle reproduces the signature bit-for-bit.
-    """
-    from pyspark.sql import functions as F
-
-    return F.concat(
-        *[
-            F.when(
-                F.substring(payload_md5, b + 1, 1).isin(*list("89abcdef")),
-                F.lit("1"),
-            ).otherwise(F.lit("0"))
-            for b in range(PHASH_BITS)
-        ]
-    )
-
-
-def phash_neardups(df: DataFrame, max_hamming: int = PHASH_MAX_HAMMING) -> DataFrame:
-    """Image near-duplicate pairs by perceptual-hash Hamming distance —
-    the multimodal leg of the dedup suite (text analog: dedup.simhash).
-
-    (media_ref, page_no, payload) → (ref_a, page_a, ref_b, page_b, hamming):
-    one row per unordered pair of DISTINCT payloads whose signatures differ
-    in ≤ ``max_hamming`` of the 16 bits; each side is represented by the
-    lexicographically smallest (media_ref, page_no) carrying that payload.
-
-    Scale design (100 TB of images):
-    - Exact duplicates collapse FIRST (groupBy payload digest) — byte-equal
-      images are the overwhelming dup mode at web scale and would otherwise
-      make every banding bucket a hot key. One shuffle on md5.
-    - Candidates come from an equi-join on (band_no, band_bits): the
-      signature splits into ``PHASH_BANDS`` contiguous bands; two signatures
-      within Hamming ``max_hamming < PHASH_BANDS`` must agree on at least
-      one whole band (pigeonhole), so band recall is EXACT, not
-      probabilistic — the DuckDB oracle brute-forces all pairs and must
-      match bit-for-bit. One shuffle per side on the band key.
-    - The Hamming verify is a row-local PHASH_BITS-term codegen sum; a pair matching
-      several bands is collapsed by one distinct on the pair key.
-    """
-    from pyspark.sql import functions as F
-
-    sig = df.select(
-        "media_ref", "page_no", F.md5(F.col("payload")).alias("h")
-    )
-    reps = (
-        sig.groupBy("h")
-        .agg(F.min(F.struct("media_ref", "page_no")).alias("rep"))
-        .select(
-            "h",
-            F.col("rep.media_ref").alias("media_ref"),
-            F.col("rep.page_no").alias("page_no"),
-            phash_bits_col(F.col("h")).alias("sig"),
-        )
-    )
-    band_w = PHASH_BITS // PHASH_BANDS
-    bands = reps.select(
-        "h",
-        "media_ref",
-        "page_no",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_no"),
-                        F.substring("sig", b * band_w + 1, band_w).alias(
-                            "band_bits"
-                        ),
-                    )
-                    for b in range(PHASH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("h", "media_ref", "page_no", "sig", "band.band_no", "band.band_bits")
-    a, b = bands.alias("a"), bands.alias("b")
-    hamming = sum(
-        F.when(
-            F.substring(F.col("a.sig"), i + 1, 1)
-            == F.substring(F.col("b.sig"), i + 1, 1),
-            F.lit(0),
-        ).otherwise(F.lit(1))
-        for i in range(PHASH_BITS)
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_bits") == F.col("b.band_bits"))
-            & (F.col("a.h") < F.col("b.h")),
-        )
-        .select(
-            F.col("a.media_ref").alias("ref_a"),
-            F.col("a.page_no").alias("page_a"),
-            F.col("b.media_ref").alias("ref_b"),
-            F.col("b.page_no").alias("page_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
     )

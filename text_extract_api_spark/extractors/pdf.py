@@ -409,10 +409,7 @@ def _scan_strings(stream: bytes) -> list[str]:
         if c == 0x5B or c == 0x5D:  # [ ] — TJ array delims: keep pending
             i += 1
             continue
-        pending_clear = c not in (
-            0x20, 0x0A, 0x0D, 0x09, 0x0C, 0x00,
-        ) and not (0x2B <= c <= 0x39 or c == 0x2D)  # numbers stay operands
-        if pending_clear and c == 0x2F:  # /Name operand
+        if c == 0x2F:  # /Name operand: skip it whole, so /Tj is no operator
             m2 = re.match(rb"/[^\s/\[\]()<>]*", stream[i:])
             i += len(m2.group(0)) if m2 else 1
             continue

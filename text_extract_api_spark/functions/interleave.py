@@ -210,8 +210,8 @@ def strip_boilerplate_spans(
     every text-carrying span whose exact payload occurs in ``min_docs``+
     DISTINCT documents (nav bars, cookie banners, footer blocks — the
     dominant web-extraction noise OBELICS/MMC4 strip before pairing),
-    ALWAYS keep media spans (a hot image is near-dup'd by
-    ``media_phash_neardup``, never dropped here — dropping it would
+    ALWAYS keep media spans (hot images are flagged by
+    :func:`media_reuse_stats`, never dropped here — dropping one would
     silently break the text↔media interleave structure downstream ops
     key on), and re-emit each document's surviving sequence fingerprint.
 
@@ -285,8 +285,8 @@ def media_reuse_stats(
     prefilter signal: images recurring across many documents are logos,
     icons, and tracking pixels, not content, and the VLM recipes drop or
     down-weight them before pairing. ``span_boilerplate_strip`` is the
-    text half of that pass; this is the media half (by reference — the
-    CONTENT-level near-dup is ``media_phash_neardup``'s job).
+    text half of that pass; this is the media half, by reference only
+    (content-level image near-dup would need decoded pixels).
 
     Returns ``(media_ref, n_docs, n_occ, is_hot)`` with ``n_docs`` the
     distinct-document recurrence, ``n_occ`` raw occurrences (an intra-doc

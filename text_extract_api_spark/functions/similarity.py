@@ -454,10 +454,12 @@ def compact_ivf_store(spark, path: str, files_per_cell: int = 1) -> None:
     files per partition: daily appends otherwise accumulate one small
     file per (batch, touched cell) and the probe's partition-pruned scan
     pays per-file open cost. Rewrite-then-swap: the new layout lands in a
-    sibling directory and replaces the old one atomically at the
-    directory level, so a concurrent reader sees old or new, never a
-    mix. Row content is bit-identical (verified by the append-path
-    oracle, which compacts before probing)."""
+    sibling directory, then two ``os.rename`` calls move the old layout
+    aside and the new one into place. The swap is NOT atomic: between
+    the renames ``assigned/`` does not exist, so a concurrent probe
+    fails. ``os.rename``/``shutil`` also make it local-filesystem only,
+    unlike the Spark-IO store operations. Row content is bit-identical
+    (verified by the append-path oracle, which compacts before probing)."""
     import os
     import shutil
 
@@ -492,23 +494,18 @@ def ivf_drift_check(
     """Has the corpus drifted away from the frozen codebook? Compare the
     CELL-OCCUPANCY distribution of the existing store against the cells
     the new batch would land in (Laplace-smoothed symmetric KL — the
-    ``kl_drift`` formula over cell ids instead of tokens). Cell counts
-    are codebook-bounded (two ≤ n_cells-row collects), so this is
-    constant driver traffic at any corpus size. Returns
+    ``kl_drift`` formula over cell ids instead of tokens). Both sides are
+    counted in ONE grouped aggregation over (side, cell) — one ≤
+    2·n_cells-row collect, so this is constant driver traffic at any
+    corpus size. Returns
     ``{"kl_sym": float, "needs_retrain": bool, "n_cells": int}`` —
     when flagged, rebuild with :func:`build_ivf_store` (assignments must
     be recomputed under a new codebook anyway)."""
-    import math
-
     from pyspark.sql import Window
 
-    old_counts = {
-        int(r["cent_id"]): int(r["n"])
-        for r in spark.read.parquet(f"{path}/assigned")
-        .groupBy("cent_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
+    stored = spark.read.parquet(f"{path}/assigned").select(
+        F.lit("old").alias("side"), F.col("cent_id").cast("long")
+    )
     cents = F.broadcast(spark.read.parquet(f"{path}/centroids"))
     emb = new_embeddings.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
@@ -516,16 +513,17 @@ def ivf_drift_check(
     w_assign = Window.partitionBy("id").orderBy(
         F.desc("cent_sim"), F.asc("cent_id")
     )
-    new_counts = {
-        int(r["cent_id"]): int(r["n"])
-        for r in emb.crossJoin(cents)
+    batch = (
+        emb.crossJoin(cents)
         .withColumn("cent_sim", cosine_pair_col(F.col("v"), F.col("cv")))
         .withColumn("rn", F.row_number().over(w_assign))
         .filter(F.col("rn") == 1)
-        .groupBy("cent_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
+        .select(F.lit("new").alias("side"), F.col("cent_id").cast("long"))
+    )
+    counts: dict[str, dict[int, int]] = {"old": {}, "new": {}}
+    for r in stored.unionByName(batch).groupBy("side", "cent_id").count().collect():
+        counts[r["side"]][int(r["cent_id"])] = int(r["count"])
+    old_counts, new_counts = counts["old"], counts["new"]
     kl_sym = _occupancy_sym_kl(old_counts, new_counts)
     return {
         "kl_sym": round(kl_sym, 6),
@@ -978,8 +976,9 @@ def pq_drift_check(
     formula over each subspace's code histogram): encode the batch against
     the frozen codebooks, compare its code distribution with the stored
     corpus's per subspace, report the WORST subspace's symmetric KL —
-    one drifted subspace already degrades every ADC distance. Histograms
-    are k-bounded (two ≤ m×k-row aggregations), constant driver traffic.
+    one drifted subspace already degrades every ADC distance. Both sides'
+    (subspace, code) pairs are stacked and counted in ONE grouped
+    aggregation — one ≤ 2·m×k-row collect, constant driver traffic.
     Returns {"kl_sym": worst, "needs_retrain": bool, "by_subspace": [...]}.
     """
     import json as _json
@@ -988,23 +987,28 @@ def pq_drift_check(
     with open(_os.path.join(path, "codebook.json")) as f:
         cb = _json.load(f)
     m = cb["m"]
-    old = spark.read.parquet(f"{path}/codes")
     base = new_embeddings.select(
         F.col(id_col).alias("vec_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     )
-    new = _pq_encode_frame(base, cb["codebooks"], m, cb["dsub"]).localCheckpoint()
-    kls = []
-    for j in range(m):
-        o = {
-            int(r[f"c{j}"]): int(r["n"])
-            for r in old.groupBy(f"c{j}").agg(F.count("*").alias("n")).collect()
-        }
-        nw = {
-            int(r[f"c{j}"]): int(r["n"])
-            for r in new.groupBy(f"c{j}").agg(F.count("*").alias("n")).collect()
-        }
-        kls.append(_occupancy_sym_kl(o, nw))
+
+    def stacked(codes: DataFrame, side: str) -> DataFrame:
+        return codes.select(
+            F.lit(side).alias("side"),
+            F.posexplode(F.array(*[F.col(f"c{j}") for j in range(m)])).alias(
+                "sub", "code"
+            ),
+        )
+
+    both = stacked(spark.read.parquet(f"{path}/codes"), "old").unionByName(
+        stacked(_pq_encode_frame(base, cb["codebooks"], m, cb["dsub"]), "new")
+    )
+    counts: dict[tuple[str, int], dict[int, int]] = {
+        (side, j): {} for side in ("old", "new") for j in range(m)
+    }
+    for r in both.groupBy("side", "sub", "code").count().collect():
+        counts[(r["side"], r["sub"])][int(r["code"])] = int(r["count"])
+    kls = [_occupancy_sym_kl(counts[("old", j)], counts[("new", j)]) for j in range(m)]
     worst = max(kls) if kls else 0.0
     return {
         "kl_sym": round(worst, 6),
