@@ -1426,7 +1426,7 @@ def q_pipeline_extract_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pipeline_extract_office(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship job's full routed extraction, INCLUDING the office
-    (docx/pptx OOXML parse, office.py) legs and the media-validity
+    (docx/pptx OOXML parse, office.py) spans and the media-validity
     quarantine filter on the pdf page store (media.py verify stub; the
     reference's PIL verify, image.py:43-48). Mirrors jobs/spans_extract.py
     exactly — VERDICT r2 item 5's oracle-checked successor of
@@ -3425,7 +3425,7 @@ OFFICE_CHUNK = 150
 def q_office_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DOCX/PPTX roundtrip: build real OOXML zips from the documents table
     (docx for even doc_ids, pptx for odd), extract through the pipeline's
-    office leg, return flat text. The oracle reproduces the expected text
+    Python leg, return flat text. The oracle reproduces the expected text
     directly from ``documents`` — whitespace normalization makes the
     paragraph/slide concat equal to the source substring."""
     import pandas as pd  # noqa: PLC0415

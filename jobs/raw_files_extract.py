@@ -74,7 +74,7 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
             )
         ).alias("spans"),
     )
-    # blob side-table for the office legs (payload fetched by media_ref)
+    # blob side-table for the office spans (payload fetched by media_ref)
     office_blobs = typed.filter(kind.isin(*OFFICE_KINDS)).select(
         F.col("path").alias("media_ref"), F.col("content").alias("payload")
     )

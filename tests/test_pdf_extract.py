@@ -30,6 +30,18 @@ def test_roundtrip_exact(compress):
     assert extract_pdf_text(make_pdf(pages, compress=compress)) == pages
 
 
+@pytest.mark.parametrize("compress", [True, False])
+@pytest.mark.parametrize("objstm", [True, False])
+def test_non_latin1_text_roundtrips_as_utf16_hex(compress, objstm):
+    """Text latin-1 cannot encode is written as a <FEFF…> UTF-16BE hex
+    string and read back exactly (it used to come back as '?'), on a TJ
+    page (even index) and a Tj page (odd index). A latin-1 page that
+    begins with þÿ, the byte-order mark's latin-1 spelling, survives too."""
+    pages = ["naïve Ωμέγα 中文 😀", "naïve Ωμέγα 中文 😀", "þÿ latin-1", "plain"]
+    pdf = make_pdf(pages, compress=compress, objstm=objstm)
+    assert extract_pdf_text(pdf) == pages
+
+
 def test_page_order_follows_kids_not_object_order():
     # hand-built file whose /Kids order DISAGREES with object-number order:
     # the extractor must follow the tree (document order), not the ids

@@ -176,9 +176,11 @@ def test_every_leg_runs_on_every_core(spark):
     they split its minimum parallelism between them and each ran one task,
     so one core parsed every html row. The pipeline puts one
     explicit-count exchange under the legs; the extraction stage (the
-    job group's largest) must run more tasks than there can be legs.
-    A media-less pdf span still extracts to '' and keeps its media_ref."""
-    from text_extract_api_spark.registry import default_registry
+    job group's largest) runs the Python leg and the column leg, each on
+    every core: exactly 2 × shuffle.partitions tasks (the pdf leg declines
+    without a page store, and the Python leg is one leg for html and
+    office). A media-less pdf span still extracts to '' and keeps its
+    media_ref."""
     from text_extract_api_spark.schema import DOCS_INTERLEAVED_SCHEMA
 
     rows = [
@@ -192,7 +194,7 @@ def test_every_leg_runs_on_every_core(spark):
     ] + [("p0000", [("pdf", "", "pdf://p0000", 0)])]
     docs = spark.createDataFrame(rows, DOCS_INTERLEAVED_SCHEMA)
     results, _ = run_extract_pipeline(spark, docs, None, None, "legs")
-    max_legs = 1 + sum(s.leg_fn is not None for s in default_registry().strategies())
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     sc = spark.sparkContext
     sc.setJobGroup("every_leg_every_core", "extraction stage task counts")
@@ -211,7 +213,7 @@ def test_every_leg_runs_on_every_core(spark):
         for sid in tracker.getJobInfo(jid).stageIds
         if tracker.getStageInfo(sid) is not None
     ]
-    assert max(task_counts) > max_legs, task_counts
+    assert max(task_counts) == 2 * n_parts, task_counts
 
     assert len(got) == 401
     assert got["h0007"][1] == ("html", "doc 7 part 1", "", 1)

@@ -20,6 +20,11 @@ SF = "/root/testdata/sf0.001"
 
 # query -> (max shuffles, max arrow stages, max windows, pushdown required)
 BOUNDS = {
+    # the flagship extraction plan: the pdf page join, ONE Python leg
+    # (html + office spans, one blob join, one mapInPandas) and the JVM
+    # when-chain; each leg re-lists the shared upstream exchanges
+    "pipeline_extract_flat": (22, 1, 0, True),
+    "pipeline_extract_office": (50, 3, 0, True),
     "dedup_paragraphs": (4, 0, 0, False),
     "chunk_windows": (1, 1, 0, False),
     "pack_sequences": (6, 2, 1, False),

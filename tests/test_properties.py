@@ -7,6 +7,13 @@ import re
 from hypothesis import given, settings, strategies as st
 
 from text_extract_api_spark.extractors.html import extract_main_content_py
+from text_extract_api_spark.extractors.office import make_docx, make_pptx
+from text_extract_api_spark.extractors.strategies import (
+    html_main_content,
+    html_markdown,
+    office_docx,
+    office_pptx,
+)
 from tests.oracle import anonymize, norm, strip_md
 
 text_st = st.text(
@@ -78,3 +85,49 @@ def test_anonymize_overlap_never_leaks_ssn_tail(s):
     out = anonymize(s + " 123-45-6789 " + s)
     assert "123-45-6789" not in out
     assert "45-6789" not in out
+
+
+# The per-span functions of the Python extraction leg. They share one Arrow
+# batch, so one raising span would fail every Python span of its batch:
+# each must return a str for any input.
+_HTML_FNS = [html_main_content().py_fn, html_markdown().py_fn]
+_OFFICE_FNS = [office_docx().py_fn, office_pptx().py_fn]
+
+
+def _mutated(data: bytes, cut: int, flips: list[tuple[int, int]]) -> bytes:
+    buf = bytearray(data[: cut % (len(data) + 1)] if cut else data)
+    for pos, val in flips:
+        if buf:
+            buf[pos % len(buf)] = val
+    return bytes(buf)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.text(max_size=400))
+def test_html_span_fns_total(s):
+    for fn in _HTML_FNS:
+        assert isinstance(fn(s, None), str)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.binary(max_size=256))
+def test_office_span_fns_total_on_arbitrary_bytes(payload):
+    for fn in _OFFICE_FNS:
+        assert isinstance(fn("", payload), str)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(st.text(max_size=40), min_size=1, max_size=3),
+    st.integers(min_value=0, max_value=4096),
+    st.lists(
+        st.tuples(st.integers(min_value=0), st.integers(0, 255)), max_size=8
+    ),
+)
+def test_office_span_fns_total_on_mutated_ooxml(texts, cut, flips):
+    """Valid OOXML, then truncated and/or byte-flipped: every prefix and
+    every corruption still yields a str."""
+    for data in (make_docx(texts), make_pptx([texts])):
+        bad = _mutated(data, cut, flips)
+        for fn in _OFFICE_FNS:
+            assert isinstance(fn("", bad), str)

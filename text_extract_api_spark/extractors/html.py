@@ -16,19 +16,17 @@ WSDM 2010):
    (link_density < 0.33, ≥ 1 word);
 4. join kept blocks with a single newline, whitespace-normalized.
 
-Spark integration: an Arrow-batched ``pandas_udf`` (Series → Series). This
-is the designated slow path — pure Python, but vectorized at the batch
-level, no per-row Spark overhead, and the parser is O(len(html)).
+Spark integration: ``extract_main_content_py`` is the per-span function
+of the ``html`` strategy (extractors/strategies.py), run in the pipeline's
+one Arrow-batched Python leg. This is the designated slow path — pure
+Python, but batched, no per-row Spark overhead, and the parser is
+O(len(html)).
 """
 
 from __future__ import annotations
 
 import re
 from html.parser import HTMLParser
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _WS_RE = re.compile(r"[ \t\r\n]+")
 
@@ -115,7 +113,7 @@ class _BlockParser(HTMLParser):
 
 
 def extract_main_content_py(html: str) -> str:
-    """Pure-Python core (shared by the UDF and the pytest oracle)."""
+    """Pure-Python core (shared by the pipeline and the pytest oracle)."""
     if not html:
         return ""
     parser = _BlockParser()
@@ -141,8 +139,3 @@ def extract_main_content_py(html: str) -> str:
             continue
         kept.append(text)
     return "\n".join(kept)
-
-
-@F.pandas_udf(T.StringType())
-def extract_main_content_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda h: extract_main_content_py(h) if isinstance(h, str) else "")

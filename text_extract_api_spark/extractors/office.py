@@ -15,9 +15,11 @@ paragraphs in document order joined with '\n'; slides in numeric
 ``slideN.xml`` order joined with '\n\n' (the pageable-concat rule,
 easyocr.py:56).
 
-Spark integration: Arrow-batched pandas UDFs over a binary column — same
-designated slow path as HTML (extractors/html.py), filtered per-leg in the
-pipeline so only office rows cross into Python.
+Spark integration: ``extract_docx_py`` / ``extract_pptx_py`` are the
+per-span functions of the ``docx`` / ``pptx`` strategies
+(extractors/strategies.py). The pipeline runs them in its one Python leg,
+next to the html functions, after one join that fetches the blob
+payloads; only office and html rows cross into Python.
 """
 
 from __future__ import annotations
@@ -26,10 +28,6 @@ import io
 import re
 import zipfile
 import xml.etree.ElementTree as ET
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _W_NS = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 _A_NS = "{http://schemas.openxmlformats.org/drawingml/2006/main}"
@@ -92,16 +90,6 @@ def extract_pptx_py(data: bytes) -> str:
             if text:
                 out.append(text)
     return "\n\n".join(out)
-
-
-@F.pandas_udf(T.StringType())
-def extract_docx_udf(data: pd.Series) -> pd.Series:
-    return data.map(lambda b: extract_docx_py(bytes(b)) if b is not None else "")
-
-
-@F.pandas_udf(T.StringType())
-def extract_pptx_udf(data: pd.Series) -> pd.Series:
-    return data.map(lambda b: extract_pptx_py(bytes(b)) if b is not None else "")
 
 
 # ---------------------------------------------------------------- builders

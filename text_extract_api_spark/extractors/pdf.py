@@ -18,7 +18,8 @@ CID fonts with multi-byte encodings.
 
 The sibling fixture writer :func:`make_pdf` emits the same subset —
 page tree, per-page FlateDecode or raw content streams, escaped literal
-strings — so round-tripping through REAL bytes (zlib deflate → object
+strings (``<FEFF…>`` UTF-16BE hex strings for text latin-1 cannot
+encode) — so round-tripping through REAL bytes (zlib deflate → object
 graph → inflate → operator scan) is oracle-checkable: the DuckDB twin
 re-derives the expected page texts from the same source column the
 builder consumed, while Spark must recover them from the binary.
@@ -38,11 +39,19 @@ from pyspark.sql import DataFrame
 _ESC = {ord("("): b"\\(", ord(")"): b"\\)", ord("\\"): b"\\\\"}
 
 
-def _esc_literal(s: str) -> bytes:
-    out = bytearray()
-    for b in s.encode("latin-1", errors="replace"):
-        out += _ESC.get(b, bytes([b]))
-    return bytes(out)
+def _show_operand(s: str) -> bytes:
+    """One text-show string operand: an escaped literal when latin-1
+    encodes ``s``, else a ``<FEFF…>`` UTF-16BE hex string (the PDF text
+    string form, §7.9.2.2). A latin-1 text that itself begins with þÿ
+    (bytes FE FF) takes the UTF-16BE form too, so the reader's byte-order
+    mark check cannot misread it."""
+    try:
+        raw = s.encode("latin-1")
+    except UnicodeEncodeError:
+        raw = None
+    if raw is None or raw.startswith(b"\xfe\xff"):
+        return b"<FEFF" + s.encode("utf-16-be").hex().upper().encode() + b">"
+    return b"(" + b"".join(_ESC.get(b, bytes([b])) for b in raw) + b")"
 
 
 def make_pdf(pages: list[str], compress: bool = True, objstm: bool = False) -> bytes:
@@ -66,24 +75,7 @@ def make_pdf(pages: list[str], compress: bool = True, objstm: bool = False) -> b
     page_obj_ids: list[int] = []
     content_ids: list[int] = []
     for i, text in enumerate(pages):
-        if i % 2 == 0 and len(text) > 1:
-            mid = len(text) // 2
-            seg = (
-                b"[" + b"(" + _esc_literal(text[:mid]) + b") -20 ("
-                + _esc_literal(text[mid:]) + b")] TJ"
-            )
-        else:
-            seg = b"(" + _esc_literal(text) + b") Tj"
-        stream = b"BT /F1 12 Tf 72 720 Td " + seg + b" ET"
-        if compress:
-            data = zlib.compress(stream)
-            head = b"<< /Length %d /Filter /FlateDecode >>" % len(data)
-        else:
-            data = stream
-            head = b"<< /Length %d >>" % len(data)
-        content_ids.append(
-            add(head + b"\nstream\n" + data + b"\nendstream")
-        )
+        content_ids.append(add(_content_stream_obj(text, i, compress)))
 
     font_id = add(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
     # reserve the pages-tree object id, then add the page objects that
@@ -124,11 +116,11 @@ def _content_stream_obj(text: str, page_idx: int, compress: bool) -> bytes:
     if page_idx % 2 == 0 and len(text) > 1:
         mid = len(text) // 2
         seg = (
-            b"[" + b"(" + _esc_literal(text[:mid]) + b") -20 ("
-            + _esc_literal(text[mid:]) + b")] TJ"
+            b"[" + _show_operand(text[:mid]) + b" -20 "
+            + _show_operand(text[mid:]) + b"] TJ"
         )
     else:
-        seg = b"(" + _esc_literal(text) + b") Tj"
+        seg = _show_operand(text) + b" Tj"
     stream = b"BT /F1 12 Tf 72 720 Td " + seg + b" ET"
     if compress:
         data = zlib.compress(stream)
@@ -330,6 +322,15 @@ _SIMPLE_ESC = {
 }
 
 
+def _decode_operand(s: bytes) -> str:
+    """A string that begins with the byte-order mark FE FF is UTF-16BE
+    (§7.9.2.2; undecodable units become U+FFFD, so the scan stays total);
+    any other string is read as latin-1."""
+    if s.startswith(b"\xfe\xff"):
+        return s[2:].decode("utf-16-be", errors="replace")
+    return s.decode("latin-1")
+
+
 def _scan_strings(stream: bytes) -> list[str]:
     """All string operands consumed by a text-showing operator
     (``Tj``, ``'``, ``\"``, or membership in a ``TJ`` array), in stream
@@ -401,7 +402,7 @@ def _scan_strings(stream: bytes) -> list[str]:
         if m:
             op = m.group(0)
             if op in (b"Tj", b"'", b'"', b"TJ"):
-                segs.extend(s.decode("latin-1") for s in pending)
+                segs.extend(map(_decode_operand, pending))
             if op not in (b"]",):  # any operator consumes its operands
                 pending.clear()
             i += len(op)

@@ -12,14 +12,19 @@ Strategy → reference parity:
   reference's extracted-text handling before the LLM transform).
 - ``markdown``: heading/emphasis strip (the reference emits markdown from
   its OCR strategies; the engine normalizes it to plain text).
-- ``html``: DOM-heuristic main-content extraction **[north-rule]** — a
-  Python (pandas-UDF) text path, so it runs as its own filtered leg.
+- ``html``: DOM-heuristic main-content extraction **[north-rule]**.
 - ``html_md``: structure-preserving HTML → Markdown conversion
   (extractors/markdown.py) under its own opt-in kind.
 - ``pdf``: page-store join + explicit-order page concat
   (converters/pdf_to_jpeg.py:12-29, easyocr.py:52-56).
-- ``docx`` / ``pptx``: OOXML zip+XML parse legs (README-claimed formats the
+- ``docx`` / ``pptx``: OOXML zip+XML parse (README-claimed formats the
   reference never shipped).
+
+``text`` and ``markdown`` are ``column_fn`` strategies (JVM codegen);
+``html``, ``html_md``, ``docx`` and ``pptx`` are ``py_fn`` per-span
+functions, which the pipeline runs together in one Arrow leg. Each must
+return a ``str`` and never raise: one raising span would fail every
+Python span of its batch. ``pdf`` is the one ``leg_fn`` (a JVM join).
 """
 
 from __future__ import annotations
@@ -27,9 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..registry import ExtractorStrategy
-from .html import extract_main_content_udf
-from .office import extract_docx_udf, extract_pptx_udf
-from .text import normalize_ws_col, strip_markdown_col
+from .html import extract_main_content_py
+from .markdown import html_to_markdown_py
+from .office import extract_docx_py, extract_pptx_py
+from .text import normalize_ws, normalize_ws_col, strip_markdown_col
 
 
 def text_normalize(config: dict | None = None) -> ExtractorStrategy:
@@ -52,41 +58,44 @@ def markdown_strip(config: dict | None = None) -> ExtractorStrategy:
     )
 
 
+def _html_span(text: str | None, payload: bytes | None) -> str:
+    return normalize_ws(extract_main_content_py(text or ""))
+
+
+def _html_md_span(text: str | None, payload: bytes | None) -> str:
+    return html_to_markdown_py(text or "")
+
+
+def _docx_span(text: str | None, payload: bytes | None) -> str:
+    return normalize_ws(extract_docx_py(payload or b""))
+
+
+def _pptx_span(text: str | None, payload: bytes | None) -> str:
+    return normalize_ws(extract_pptx_py(payload or b""))
+
+
 def html_main_content(config: dict | None = None) -> ExtractorStrategy:
     config = config or {}
-
-    def leg(flat_slice: DataFrame, ctx: dict, cfg: dict) -> DataFrame:
-        return flat_slice.withColumn(
-            "extracted", normalize_ws_col(extract_main_content_udf(F.col("text")))
-        )
-
     return ExtractorStrategy(
         name="html",
         kinds=tuple(config.get("kinds", ("html",))),
-        leg_fn=leg,
+        py_fn=_html_span,
         config=config,
     )
 
 
 def html_markdown(config: dict | None = None) -> ExtractorStrategy:
-    """Structure-PRESERVING html leg (extractors/markdown.py): emits
+    """Structure-PRESERVING html extraction (extractors/markdown.py): emits
     Markdown with headings/lists/links intact instead of flattened main
-    content. Registered under its own kind (``html_md``) so a user opts a
-    span slice into it via YAML/`register` without changing the default
-    ``html`` leg's flattening contract (and the flagship oracle)."""
+    content, so no whitespace normalization. Registered under its own kind
+    (``html_md``) so a user opts a span slice into it via YAML/`register`
+    without changing the default ``html`` flattening contract (and the
+    flagship oracle)."""
     config = config or {}
-
-    def leg(flat_slice: DataFrame, ctx: dict, cfg: dict) -> DataFrame:
-        from .markdown import html_to_markdown_udf
-
-        return flat_slice.withColumn(
-            "extracted", html_to_markdown_udf(F.col("text"))
-        )
-
     return ExtractorStrategy(
         name="html_md",
         kinds=tuple(config.get("kinds", ("html_md",))),
-        leg_fn=leg,
+        py_fn=_html_md_span,
         config=config,
     )
 
@@ -118,30 +127,12 @@ def pdf_pages(config: dict | None = None) -> ExtractorStrategy:
     )
 
 
-def _office_leg(udf):
-    def leg(flat_slice: DataFrame, ctx: dict, cfg: dict) -> DataFrame | None:
-        blobs = ctx.get("office_blobs")
-        if blobs is None:
-            return None  # decline: kinds fall through to the default '' leg
-        return (
-            flat_slice.join(
-                blobs.select("media_ref", "payload").hint("merge"),
-                "media_ref",
-                "left",
-            )
-            .withColumn("extracted", normalize_ws_col(udf(F.col("payload"))))
-            .drop("payload")
-        )
-
-    return leg
-
-
 def office_docx(config: dict | None = None) -> ExtractorStrategy:
     config = config or {}
     return ExtractorStrategy(
         name="docx",
         kinds=tuple(config.get("kinds", ("docx",))),
-        leg_fn=_office_leg(extract_docx_udf),
+        py_fn=_docx_span,
         config=config,
     )
 
@@ -151,7 +142,7 @@ def office_pptx(config: dict | None = None) -> ExtractorStrategy:
     return ExtractorStrategy(
         name="pptx",
         kinds=tuple(config.get("kinds", ("pptx",))),
-        leg_fn=_office_leg(extract_pptx_udf),
+        py_fn=_pptx_span,
         config=config,
     )
 

@@ -12,6 +12,8 @@ Every regex here must behave identically under Java regex (Spark) and RE2
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, functions as F
 
 # Collapse all whitespace runs to a single space, then trim.
@@ -24,6 +26,16 @@ MD_EMPH_RE = "[*_]{1,3}"
 
 def normalize_ws_col(c: Column) -> Column:
     return F.trim(F.regexp_replace(c, WS_RE, " "))
+
+
+_WS_PY_RE = re.compile(WS_RE)
+
+
+def normalize_ws(s: str) -> str:
+    """Python twin of :func:`normalize_ws_col` for the per-span functions:
+    Spark's ``trim`` strips the space character only, so ``strip(" ")``,
+    never bare ``strip()`` (which would also trim \\x0b, \\f, NBSP...)."""
+    return _WS_PY_RE.sub(" ", s).strip(" ")
 
 
 def strip_markdown_col(c: Column) -> Column:

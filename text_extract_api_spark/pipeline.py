@@ -6,7 +6,7 @@ lifecycle (``extract/tasks.py:18-96``):
     read docs → content_hash (md5, file_format.py:109-110)
       → cache probe (Redis get, tasks.py:44-48)  ⇒  inner/anti join split
       → strategy dispatch by kind (file_format.py:196-202) ⇒ CASE routing
-      → per-kind extraction (strategies/*)        ⇒ Column exprs + one UDF
+      → per-kind extraction (strategies/*)        ⇒ Column exprs + one mapInPandas
       → page concat in page order (easyocr.py:52-56, pdf_to_jpeg.py:16)
                                                   ⇒ media join + sorted agg
       → PII pass (tasks.py:71-84 LLM prompt)      ⇒ regexp_replace chain
@@ -36,16 +36,17 @@ Scale properties (the part that matters at 10^12 docs):
   rep join runs once. Elsewhere AQE coalesces/splits partitions at
   runtime; cache joins broadcast automatically when the cache side is
   small.
-- **no per-row Python**: text/markdown/pii/pdf paths are whole-stage
-  codegen; only HTML crosses into an Arrow-batched pandas UDF, and only
-  HTML *rows* pay for it (non-html rows pass '' through the batch).
+- **no per-row Python outside one leg**: text/markdown/pii/pdf paths are
+  whole-stage codegen; html and office spans cross into ONE Arrow-batched
+  ``mapInPandas`` that dispatches on kind, and only their rows pay for
+  it (every other row stays in the JVM legs).
 - **order is explicit**: every regroup sorts on ``offset`` / ``page_no``,
   never on arrival order (strict span-sequence-equality invariant).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .extractors.pii import anonymize_col
 from .schema import MEDIA_KINDS
@@ -96,6 +97,52 @@ def pdf_page_texts(media_pages: DataFrame, page_sep: str | None = None) -> DataF
     )
 
 
+# what each extraction leg hands to the union
+_LEG_COLS = ("key", "kind", "media_ref", "offset", "extracted")
+
+
+def _python_leg(
+    rows: DataFrame, py_fns: dict, office_blobs: DataFrame | None
+) -> DataFrame:
+    """Every ``py_fn`` kind's rows in ONE Arrow leg: media-kind rows get
+    their blob payload from one merge-hinted left join (the blob table
+    scales with the corpus; AQE re-plans small cases to broadcast), all
+    other rows a null payload, then one ``mapInPandas`` calls each row's
+    per-span function. Html rows never enter the join: their ``media_ref``
+    is '', one hot key that would put every html row in one partition.
+    With no blob store every row gets a null payload, so the office
+    functions return '' (the span a missing blob also yields)."""
+    null_payload = F.lit(None).cast("binary").alias("payload")
+    media = [k for k in py_fns if k in MEDIA_KINDS]
+    if office_blobs is None or not media:
+        rows = rows.select("*", null_payload)
+    else:
+        kind = F.col("kind")
+        rows = rows.filter(~kind.isin(*media)).select("*", null_payload).unionByName(
+            rows.filter(kind.isin(*media)).join(
+                office_blobs.select("media_ref", "payload").hint("merge"),
+                "media_ref",
+                "left",
+            )
+        )
+    out_schema = T.StructType(
+        [rows.schema[c] for c in _LEG_COLS[:-1]]
+        + [T.StructField("extracted", T.StringType())]
+    )
+
+    def run(batches):
+        for batch in batches:
+            batch["extracted"] = [
+                py_fns[k](t, p)
+                for k, t, p in zip(batch["kind"], batch["text"], batch["payload"])
+            ]
+            yield batch[list(_LEG_COLS)]
+
+    return rows.select(*_LEG_COLS[:-1], "text", "payload").mapInPandas(
+        run, out_schema
+    )
+
+
 def extract_spans_flat(
     flat: DataFrame,
     media_pages: DataFrame | None,
@@ -111,19 +158,23 @@ def extract_spans_flat(
     Strategies come from the registry (``conf/strategies.yaml`` +
     autodiscovery — the reference's YAML registry, strategy.py:73-139);
     passing ``registry`` overrides per-call (register/override API, U4).
-    Routing is split-per-leg, not a CASE over all rows:
+    Routing is split-per-leg, not a CASE over all rows; there are at most
+    (accepted ``leg_fn`` legs) + 2 legs:
 
-    - each **leg_fn strategy** (html, pdf, docx, pptx) gets its own leg over
-      only its kinds' rows. For the Python legs that filtering is
-      load-bearing: feeding '' for non-matching rows still ships every row
-      across the Arrow boundary, measured 2-5× slower on the sf0.1 bench and
-      it *anti-scaled* with worker count (9.7 s at 32 cores vs 5.7 s at 8;
-      filtered: 2.0 s). For the pdf join leg it avoids shuffling non-pdf
-      rows (media_ref '' — a maximally hot key) through the join — a
-      textbook skew bug at scale. A leg_fn may decline (return None, e.g. no
-      page store or office blob store supplied) — its kinds then fall to
-      the default leg: a corpus without media must not pay an extra
-      consumer pass over the upstream exchange.
+    - each **leg_fn strategy** (pdf) gets its own leg over only its kinds'
+      rows. For the pdf join leg that avoids shuffling non-pdf rows
+      (media_ref '' — a maximally hot key) through the join — a textbook
+      skew bug at scale. A leg_fn may decline (return None, e.g. no page
+      store supplied) — its kinds then fall to the default leg: a corpus
+      without media must not pay an extra consumer pass over the
+      upstream exchange.
+    - all **py_fn strategies** (html, html_md, docx, pptx) share ONE
+      Python leg over only their kinds' rows (``_python_leg``), the first
+      registration winning a kind. Filtering is load-bearing: feeding ''
+      for non-matching rows still ships every row across the Arrow
+      boundary, measured 2-5× slower on the sf0.1 bench and it
+      *anti-scaled* with worker count (9.7 s at 32 cores vs 5.7 s at 8;
+      filtered: 2.0 s).
     - all **column_fn strategies** (text, markdown, pii_text) fuse into ONE
       pure-JVM when-chain leg, whole-stage codegen, unclaimed kinds → ''.
 
@@ -140,15 +191,26 @@ def extract_spans_flat(
 
     legs: list[DataFrame] = []
     claimed: list[str] = []
+    py_fns: dict = {}
     column_strategies = []
     for strat in registry.strategies():
         if strat.leg_fn is not None:
             leg = strat.leg_fn(flat.filter(kind.isin(*strat.kinds)), ctx, strat.config)
             if leg is not None:
-                legs.append(leg)
+                legs.append(leg.select(*_LEG_COLS))
                 claimed.extend(strat.kinds)
+        elif strat.py_fn is not None:
+            for k in strat.kinds:
+                py_fns.setdefault(k, strat.py_fn)
         else:
             column_strategies.append(strat)
+
+    py_fns = {k: fn for k, fn in py_fns.items() if k not in claimed}
+    if py_fns:
+        legs.append(
+            _python_leg(flat.filter(kind.isin(*py_fns)), py_fns, office_blobs)
+        )
+        claimed.extend(py_fns)
 
     expr = None
     for strat in column_strategies:
@@ -162,7 +224,9 @@ def extract_spans_flat(
     not_claimed = (
         F.coalesce(~kind.isin(*claimed), F.lit(True)) if claimed else F.lit(True)
     )
-    legs.append(flat.filter(not_claimed).withColumn("extracted", expr))
+    legs.append(
+        flat.filter(not_claimed).withColumn("extracted", expr).select(*_LEG_COLS)
+    )
 
     out = legs[0]
     for leg in legs[1:]:

@@ -9,15 +9,19 @@ Available: ...`` (``:55-64``).
 
 The Spark shape differs from the reference's class-per-strategy model: an
 engine strategy contributes to the *plan*, not to per-row dispatch, so a
-strategy is either
+strategy is one of three kinds:
 
 - a ``column_fn`` — a pure-JVM Column expression over the span text (all
   such strategies fuse into ONE codegen when-chain leg, zero extra passes);
-- or a ``leg_fn`` — a builder that takes the pre-filtered slice of flat
+- a ``py_fn`` — a plain per-span Python function ``(text, payload) -> str``
+  (payload: the span's office blob bytes, or ``None``). All such
+  strategies run in ONE leg: one blob join for their media kinds and one
+  ``mapInPandas`` that dispatches on ``kind`` inside each Arrow batch;
+- a ``leg_fn`` — a builder that takes the pre-filtered slice of flat
   spans for its kinds plus a context dict (media/blob side tables) and
-  returns the slice with an ``extracted`` column (the filtered-Arrow-leg /
-  join legs). Returning ``None`` declines (e.g. no page or blob store
-  supplied) and the kinds fall through to the default '' leg.
+  returns the slice with an ``extracted`` column (the pdf page join).
+  Returning ``None`` declines (e.g. no page store supplied) and the kinds
+  fall through to the default '' leg.
 
 Per-strategy YAML config (the reference's ``set_strategy_config``,
 ``strategy.py:21-22``) is passed to the factory and captured in the closure
@@ -43,14 +47,16 @@ class ExtractorStrategy:
     name: str
     kinds: tuple[str, ...]
     column_fn: Callable[[Column, dict], Column] | None = None
+    py_fn: Callable[[str | None, bytes | None], str] | None = None
     leg_fn: Callable[[DataFrame, dict, dict], DataFrame | None] | None = None
     config: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
-        if (self.column_fn is None) == (self.leg_fn is None):
+        impls = (self.column_fn, self.py_fn, self.leg_fn)
+        if sum(fn is not None for fn in impls) != 1:
             raise ValueError(
                 f"Strategy '{self.name}' must define exactly one of "
-                "column_fn or leg_fn"
+                "column_fn, py_fn or leg_fn"
             )
 
 
