@@ -4917,7 +4917,7 @@ FROM documents WHERE n_chars < 60 OR length(trim(text)) = 0
 WITH {SYNTH_CTE}
 SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
        CAST(COUNT(*) AS BIGINT) AS n_spans,
-       CAST(SUM(length(text)) AS BIGINT) AS n_bytes
+       CAST(SUM(strlen(text)) AS BIGINT) AS n_bytes
 FROM spans
 """.strip(),
         "token_count": """

@@ -55,7 +55,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Window, functions as F  # noqa: E402
+from pyspark.sql import Observation, Window, functions as F  # noqa: E402
 
 from text_extract_api_spark import jobrun  # noqa: E402
 from text_extract_api_spark.checkpoint import bucket_col  # noqa: E402
@@ -66,6 +66,7 @@ from text_extract_api_spark.functions.interleave import (  # noqa: E402
 )
 from text_extract_api_spark.functions.sampling import epoch_shuffle  # noqa: E402
 from text_extract_api_spark.io import read_table, write_table  # noqa: E402
+from text_extract_api_spark.partitioning import payload_size_col  # noqa: E402
 from text_extract_api_spark.synth import (  # noqa: E402
     synth_flat_spans,
     synthesize_interleaved,
@@ -105,11 +106,16 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
 
     # The interleaved corpus (Iceberg-scan stand-in). localCheckpoint both
     # shapes once: four stages consume them and the synthesis subtree
-    # would otherwise replay per stage.
+    # would otherwise replay per stage. The first checkpoint also observes
+    # the corpus size, which sizes the shuffles of every stage after it.
     docs_nested, _ = synthesize_interleaved(
         spark, args.sf_dir, args.multiplier, args.inflate
     )
-    docs_nested = docs_nested.localCheckpoint()
+    corpus = Observation("corpus")
+    docs_nested = docs_nested.observe(
+        corpus, F.sum(payload_size_col()).alias("bytes")
+    ).localCheckpoint()
+    job.size_shuffles(corpus.get["bytes"] or 0)
     flat = synth_flat_spans(
         spark, args.sf_dir, args.multiplier, args.inflate
     ).select(

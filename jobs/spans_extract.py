@@ -27,44 +27,18 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import Observation, functions as F  # noqa: E402
 
 from text_extract_api_spark import jobrun  # noqa: E402
 from text_extract_api_spark.checkpoint import bucket_col  # noqa: E402
 from text_extract_api_spark.extractors.media import validate_media_pages  # noqa: E402
 from text_extract_api_spark.io import read_table, table_exists, write_table  # noqa: E402
-from text_extract_api_spark.partitioning import repartition_by_size  # noqa: E402
+from text_extract_api_spark.partitioning import (  # noqa: E402
+    payload_size_col,
+    repartition_by_size,
+)
 from text_extract_api_spark.pipeline import run_extract_pipeline  # noqa: E402
 from text_extract_api_spark.synth import synthesize_interleaved_office  # noqa: E402
-
-
-TARGET_PARTITION_MB = 64  # per-task shuffle budget (matches AQE advisory)
-
-
-def _autoscale_shuffle_partitions(spark) -> None:
-    """Size ``spark.sql.shuffle.partitions`` from the MEASURED corpus size.
-
-    The ×256 scale-up probe (r5) caught the failure mode this prevents: a
-    fixed 32-partition layout pushes corpus/32 bytes through every
-    reassembly task — ~400 MB/task at 12.8 GB of spans — and 32 such
-    concurrent object-agg buffers blow the heap long before the plan is
-    wrong. Partition count must grow with data so per-task bytes stay
-    constant (the spill-aware sizing rule); AQE coalesces back down when
-    partitions come out small, so oversizing costs nothing.
-
-    Uses the cached-corpus storage size (free to read after the persist) —
-    an Iceberg deployment gets the same number from table statistics. An
-    explicit ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` pins the count instead
-    (the scaling bench holds it fixed across parallelism levels — there it
-    is a controlled variable, not a knob)."""
-    if os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"):
-        return
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    cached = sum(i.memSize() + i.diskSize() for i in infos)
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    need = min(2048, max(cur, int(cached / (TARGET_PARTITION_MB * 1024 * 1024)) + 1))
-    if need > cur:
-        spark.conf.set("spark.sql.shuffle.partitions", str(need))
 
 
 def main(argv: list[str] | None = None, spark=None) -> dict:
@@ -98,10 +72,12 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         )
         # Synthesis is a stand-in for the Iceberg scan; materialize it so the
         # timed window measures extraction, and so multi-action waves don't
-        # recompute the synthesis joins.
+        # recompute the synthesis joins. The count that builds the cache
+        # also observes the corpus size the shuffles are sized from.
         docs = docs.persist()
-        docs.count()
-        _autoscale_shuffle_partitions(spark)
+        corpus = Observation("corpus")
+        docs.observe(corpus, F.sum(payload_size_col()).alias("bytes")).count()
+        job.size_shuffles(corpus.get["bytes"] or 0)
 
     results_loc = f"{args.out}/results"
     cache_loc = f"{args.out}/cache"

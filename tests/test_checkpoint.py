@@ -3,14 +3,15 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from text_extract_api_spark.checkpoint import (
     bucket_col,
     completed_buckets,
-    filter_resumable,
+    observe_extraction,
     write_progress,
 )
+from text_extract_api_spark.schema import SPANS_TYPE
 from text_extract_api_spark.synth import synthesize_interleaved
 
 N_BUCKETS = 8
@@ -47,14 +48,6 @@ def test_resume_skips_done_buckets(spark, docs, tmp_path):
     done = completed_buckets(spark, progress, run_id)
     assert {r["bucket"] for r in done.collect()} == {0, 1, 2}
 
-    remaining = filter_resumable(docs.drop("bucket"), done, N_BUCKETS)
-    got_buckets = {r["bucket"] for r in remaining.select("bucket").distinct().collect()}
-    assert got_buckets == set(range(3, N_BUCKETS))
-
-    # union of completed + remaining == full input, disjointly
-    n_half = half.count()
-    assert n_half + remaining.count() == docs.count()
-
 
 def test_completed_buckets_empty_when_no_progress(spark, tmp_path):
     done = completed_buckets(spark, str(tmp_path / "nope"), "x")
@@ -82,22 +75,21 @@ def test_corrupt_progress_raises_instead_of_reading_as_empty(spark, tmp_path):
 def test_observation_milestones_and_polling(spark, docs, tmp_path):
     """Observation metrics ride the consuming action (Celery update_state
     analog); milestone rows are pollable and never match the resume filter."""
-    from text_extract_api_spark.checkpoint import (
-        observe_extraction,
-        poll_progress,
-        write_milestone,
-    )
+    from text_extract_api_spark.checkpoint import poll_progress
 
     progress = str(tmp_path / "progress")
     run_id = "obs-test"
 
     observed, obs = observe_extraction(docs.select("doc_id", "spans", "bucket"), "m0")
-    write_progress(observed, progress, run_id, "2026-01-01 00:00:00")
+    observed.write.format("noop").mode("overwrite").save()
     metrics = obs.get
     assert metrics["docs"] == docs.count()
     assert metrics["spans"] > 0 and metrics["bytes"] > 0
 
-    write_milestone(spark, progress, run_id, "2026-01-01 00:00:00", "wave_0", metrics)
+    write_progress(
+        docs.select("doc_id", "spans", "bucket"), progress, run_id,
+        "2026-01-01 00:00:00", milestone=("wave_0", metrics),
+    )
 
     # milestone rows must not mark buckets done
     done = completed_buckets(spark, progress, run_id)
@@ -110,6 +102,23 @@ def test_observation_milestones_and_polling(spark, docs, tmp_path):
     # unknown run → PENDING (empty)
     assert poll_progress(spark, progress, "other-run").count() == 0
     assert poll_progress(spark, str(tmp_path / "missing"), run_id).count() == 0
+
+
+def test_observed_bytes_are_utf8_bytes(spark):
+    """``bytes`` counts UTF-8 bytes, not characters: CJK text is 3 bytes a
+    character and emoji 4, so a character count under-sizes a non-ASCII
+    corpus."""
+    text = "naïve 中文 😀"
+    one = spark.createDataFrame(
+        [(1, [("text", text, None, 0)])],
+        T.StructType([
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("spans", SPANS_TYPE),
+        ]),
+    )
+    observed, obs = observe_extraction(one, "utf8")
+    observed.write.format("noop").mode("overwrite").save()
+    assert obs.get["bytes"] == len(text.encode()) != len(text)
 
 
 def test_crash_between_results_write_and_marker_is_exactly_once(

@@ -80,20 +80,12 @@ def completed_buckets(spark: SparkSession, progress_loc: str, run_id: str) -> Da
     return prog.filter(F.col("status") == "done").select("bucket").distinct()
 
 
-def filter_resumable(
-    docs: DataFrame, done: DataFrame, n_buckets: int
-) -> DataFrame:
-    """Drop documents whose bucket already completed (idempotent resume)."""
-    withb = docs.withColumn("bucket", bucket_col(F.col("doc_id"), n_buckets))
-    return withb.join(F.broadcast(done), "bucket", "left_anti")
-
-
 def _spans_metrics(results: DataFrame) -> tuple[Column, Column]:
     """(spans, bytes) aggregates — zero for frames without a spans payload
     (e.g. the prep jobs' verdict rows)."""
     if "spans" not in results.columns:
         return F.lit(0), F.lit(0)
-    # chars of extracted text only — a to_json over the span array would
+    # UTF-8 bytes of extracted text only — a to_json over the span array would
     # re-serialize the whole corpus just for a progress metric
     return F.sum(F.size("spans")), F.sum(payload_size_col())
 
@@ -118,25 +110,6 @@ def observe_extraction(results: DataFrame, name: str):
         F.coalesce(nbytes, F.lit(0)).alias("bytes"),
     )
     return observed, obs
-
-
-def write_milestone(
-    spark: SparkSession,
-    progress_loc: str,
-    run_id: str,
-    run_ts: str,
-    milestone: str,
-    metrics: dict,
-) -> None:
-    """Append one milestone row (status='milestone:<name>') with observed
-    metrics — the per-wave analog of the reference's PROGRESS states
-    (10/30/50/75, tasks.py:41-63). Milestone rows use bucket=-1 and never
-    match the ``status == 'done'`` resume filter."""
-    write_table(
-        _milestone_row(spark, run_id, run_ts, f"milestone:{milestone}", metrics),
-        progress_loc,
-        mode="append",
-    )
 
 
 def poll_progress(spark: SparkSession, progress_loc: str, run_id: str) -> DataFrame:

@@ -91,13 +91,6 @@ def doc_shingle_arrays(
     )
 
 
-def doc_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """Exploded (id, shingle) pairs — distinct per doc (audit/candidate path)."""
-    return doc_shingle_arrays(docs, id_col, text_col, n).select(
-        "id", F.explode("sh").alias("shingle")
-    )
-
-
 def _pair_jaccard(pairs: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
     """Verify candidate pairs with row-local array intersection.
 
@@ -205,40 +198,6 @@ def minhash_signature(
     return base.select(
         "id", *[minhash_seed_col(F.col("sh"), s).alias(f"sig_{s}") for s in range(seeds)]
     )
-
-
-def band_keys_from_shingles(sh_col, bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> F.Column:
-    """Array of per-band LSH keys, straight from the shingle array.
-
-    Each band key is md5 of its signature slice; every per-seed array_min
-    subexpression occurs exactly once in the tree (see
-    :func:`minhash_signature` for why that matters).
-    """
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[minhash_seed_col(sh_col, b * rows + r) for r in range(rows)],
-                )
-            )
-            for b in range(bands)
-        ]
-    )
-
-
-def lsh_bands(sig: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> DataFrame:
-    """(id, band, band_key) from a flat sig_0..sig_{n-1} frame — one
-    posexplode of the row-local band-key array (no union, no recompute)."""
-    keys = F.array(
-        *[
-            F.md5(
-                F.concat_ws("|", *[F.col(f"sig_{b * rows + r}") for r in range(rows)])
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select("id", F.posexplode(keys).alias("band", "band_key"))
 
 
 def _band_pairs(base: DataFrame) -> DataFrame:

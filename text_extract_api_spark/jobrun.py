@@ -47,6 +47,11 @@ _JOB_CONF = {
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
 }
 
+# Shuffle sizing (``Job.size_shuffles``): the per-task byte budget, equal to
+# AQE's advisory partition size, and the most partitions the rule asks for.
+TARGET_PARTITION_MB = 64
+MAX_SHUFFLE_PARTITIONS = 2048
+
 
 def arg_parser(
     run_id: str, *, waves: bool = False, run_ts: bool = True
@@ -102,6 +107,33 @@ class Job:
     def start_clock(self) -> None:
         """Start the summary's ``sec`` window (set-up before it is excluded)."""
         self.t0 = time.time()
+
+    def size_shuffles(self, nbytes: int) -> int:
+        """Raise ``spark.sql.shuffle.partitions`` to ``nbytes /
+        TARGET_PARTITION_MB + 1``, capped at ``MAX_SHUFFLE_PARTITIONS``;
+        never lower it. Returns the count in force.
+
+        ``nbytes`` is the measured corpus size, read from an ``Observation``
+        riding an action the job runs anyway. The ×256 scale-up probe caught
+        the failure this prevents: at a fixed 32 partitions every reassembly
+        task took ~400 MB of a 12.8 GB span corpus, and 32 such concurrent
+        object-agg buffers blew the heap. Per-task bytes stay bounded only
+        if the count grows with the data. AQE cannot do it alone, as it
+        never splits beyond the initial count, and AQE coalesces partitions
+        that come out small, so oversizing costs little.
+
+        The count from the master (``get_spark``), or one pinned through
+        ``SPARK_GRAFT_EXTRA_CONF``, is the floor."""
+        key = "spark.sql.shuffle.partitions"
+        cur = int(self.spark.conf.get(key))
+        need = min(
+            MAX_SHUFFLE_PARTITIONS,
+            int(nbytes / (TARGET_PARTITION_MB * 1024 * 1024)) + 1,
+        )
+        if need <= cur:
+            return cur
+        self.spark.conf.set(key, str(need))
+        return need
 
     def run_stage(
         self, name: str, write: Callable[[], dict | None]

@@ -5,8 +5,8 @@ salted repartitioning and adaptive coalesce". The synthesizer inflates ~1%
 of documents 50× (synth.py OVERSIZE knobs) to make this observable.
 
 Strategy (API-level, no custom Catalyst rule needed — SURVEY.md §4):
-- estimate per-document payload size cheaply (sum of span text lengths —
-  a codegen'd expression, no Python);
+- estimate per-document payload size cheaply (sum of span text UTF-8
+  byte lengths — a codegen'd expression, no Python);
 - size bucket = log2 class of the payload size;
 - salt = pmod(xxhash64(doc_id), S) so heavy docs of the same size class
   spread across S partitions;
@@ -23,10 +23,12 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def payload_size_col() -> F.Column:
+    """UTF-8 bytes of a ``spans`` array's text (``length`` would count
+    characters: 3 bytes each for CJK, 4 for emoji)."""
     return F.aggregate(
         F.col("spans"),
         F.lit(0).cast("long"),
-        lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)).cast("long"),
+        lambda acc, s: acc + F.coalesce(F.octet_length(s["text"]), F.lit(0)).cast("long"),
     )
 
 

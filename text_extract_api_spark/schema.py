@@ -72,18 +72,3 @@ CACHE_SCHEMA = T.StructType(
         T.StructField("run_id", T.StringType(), True),
     ]
 )
-
-# Per-partition checkpoint/lineage rows — the engine analog of Celery
-# progress states (tasks.py:40-94: PENDING/PROGRESS/SUCCESS milestones).
-PROGRESS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("docs_done", T.LongType(), False),
-        T.StructField("spans_done", T.LongType(), False),
-        T.StructField("bytes_done", T.LongType(), False),
-        T.StructField("updated_at", T.TimestampType(), True),
-    ]
-)

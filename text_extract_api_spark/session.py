@@ -3,6 +3,11 @@
 Local mode stands in for the cluster in this sandbox; every setting here is
 chosen to survive a 1000-executor / 100 TB deployment:
 
+- ``spark.sql.shuffle.partitions`` is the master's task slots: N for
+  ``local[N]``, executors × cores for ``local-cluster[executors,cores,mem]``
+  and ``SPARK_GRAFT_CPUS`` for ``local[*]`` or a master without a count. A
+  job that knows its corpus size raises it from there
+  (``jobrun.Job.size_shuffles``).
 - AQE on (runtime coalesce + skew-join splitting) — the engine's media-size
   skew handling leans on this plus explicit salting (partitioning.py).
 - Arrow batch size bounded so one oversized media document cannot blow up a
@@ -15,39 +20,35 @@ chosen to survive a 1000-executor / 100 TB deployment:
 from __future__ import annotations
 
 import os
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
+
+PACKAGE = os.path.basename(os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# zip timestamps can't predate 1980; any fixed value keeps builds bit-identical
+_EPOCH = (2020, 1, 1, 0, 0, 0)
 
 
 def get_spark(
     app_name: str = "text_extract_api_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        env_sp = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        if env_sp:
-            # fixed partitioning across parallelism levels (scaling benches:
-            # partition count must not be a hidden second variable)
-            shuffle_partitions = int(env_sp)
-        else:
-            # local[N] → N-ish shuffle partitions; on a real cluster this is
-            # 2-3× total cores, set via spark-submit conf.
-            n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
-            if master.startswith("local-cluster"):
-                # local-cluster[N,cores,mem] → N×cores total slots
-                execs, cores = (int(x) for x in n.split(",")[:2])
-                shuffle_partitions = execs * cores
-            else:
-                shuffle_partitions = cpus if n == "*" else int(n)
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
+    if master.startswith("local-cluster"):
+        execs, cores = (int(x) for x in n.split(",")[:2])
+        slots = execs * cores
+    else:
+        slots = cpus if n == "*" else int(n)
 
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(slots))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -88,6 +89,35 @@ def get_spark(
     return spark
 
 
+def build_zip(out_path: str) -> str:
+    """Write the ``--py-files`` artifact to ``out_path``: the package's
+    ``.py``/``.yaml`` files plus ``conf/*.yaml`` (the registry loads
+    ``conf/strategies.yaml`` relative to the package's parent when
+    present). Deterministic — sorted entries, fixed timestamps — so its md5
+    doubles as a deploy fingerprint."""
+    os.makedirs(os.path.dirname(out_path) or ".", exist_ok=True)
+    entries: list[str] = []
+    for dirpath, dirnames, filenames in os.walk(os.path.join(REPO, PACKAGE)):
+        dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
+        entries += [
+            os.path.join(dirpath, fn) for fn in sorted(filenames)
+            if fn.endswith((".py", ".yaml"))
+        ]
+    conf = os.path.join(REPO, "conf")
+    if os.path.isdir(conf):
+        entries += [
+            os.path.join(conf, fn) for fn in sorted(os.listdir(conf))
+            if fn.endswith(".yaml")
+        ]
+    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for full in entries:
+            info = zipfile.ZipInfo(os.path.relpath(full, REPO), date_time=_EPOCH)
+            info.external_attr = 0o644 << 16
+            with open(full, "rb") as f:
+                zf.writestr(info, f.read(), zipfile.ZIP_DEFLATED)
+    return out_path
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship the engine package to executors as a py-files zip.
 
@@ -101,32 +131,10 @@ def _ship_package(spark: SparkSession) -> None:
     remains the deployment path; this makes the jobs correct by default
     on any master. Skips when a py-files copy of the package is already
     shipped (idempotent under getOrCreate reuse)."""
-    import tempfile
-    import zipfile
-
-    pkg_root = os.path.dirname(os.path.abspath(__file__))
-    pkg = os.path.basename(pkg_root)
     includes = getattr(spark.sparkContext, "_python_includes", None) or []
-    if any(pkg in inc for inc in includes):
+    if any(PACKAGE in inc for inc in includes):
         return
-    zip_path = os.path.join(
-        tempfile.mkdtemp(prefix="spark_graft_pyfiles_"), f"{pkg}.zip"
-    )
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for dirpath, dirnames, filenames in os.walk(pkg_root):
-            dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
-            for fn in sorted(filenames):
-                if fn.endswith((".py", ".yaml")):
-                    full = os.path.join(dirpath, fn)
-                    arc = os.path.join(
-                        pkg, os.path.relpath(full, pkg_root)
-                    )
-                    zf.write(full, arc)
-        # conf/ travels too (the registry loads conf/strategies.yaml
-        # relative to the package's parent when present)
-        conf = os.path.join(os.path.dirname(pkg_root), "conf")
-        if os.path.isdir(conf):
-            for fn in sorted(os.listdir(conf)):
-                if fn.endswith(".yaml"):
-                    zf.write(os.path.join(conf, fn), os.path.join("conf", fn))
+    zip_path = build_zip(os.path.join(
+        tempfile.mkdtemp(prefix="spark_graft_pyfiles_"), f"{PACKAGE}.zip"
+    ))
     spark.sparkContext.addPyFile(zip_path)

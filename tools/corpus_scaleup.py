@@ -90,8 +90,9 @@ def run_once(sf_dir: str, mult: int) -> dict:
     # The single local JVM stands in for CORES executors; a real cluster
     # scales total heap with the fleet, so the probe's heap grows with the
     # corpus (×256 ≈ 12.8 GB of spans needs headroom for cache + 32
-    # concurrent task buffers; 16 g measured OOM before the r5 partition
-    # autoscale, and cache-vs-execution pressure remains real above it).
+    # concurrent task buffers; 16 g measured OOM before shuffles were sized
+    # from the corpus (jobrun.Job.size_shuffles), and cache-vs-execution
+    # pressure remains real above it).
     env["SPARK_GRAFT_DRIVER_MEM"] = (
         "48g" if mult >= 128 else "24g" if mult >= 64 else "16g"
     )

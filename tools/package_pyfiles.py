@@ -2,8 +2,9 @@
 
 The north rule ships the engine "via spark-submit --py-files" — executors
 (and, in client mode, the driver) import the package from this zip, not
-from a checkout. The zip is deterministic (sorted entries, fixed
-timestamp) so its md5 doubles as a deploy fingerprint.
+from a checkout. ``session.build_zip`` decides what goes in it; the same
+builder ships the package automatically on a master with separate
+executor JVMs.
 
 Usage:
     python tools/package_pyfiles.py [out_zip]
@@ -15,40 +16,11 @@ from __future__ import annotations
 
 import os
 import sys
-import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-PACKAGE = "text_extract_api_spark"
-# zip timestamps can't predate 1980; any fixed value keeps builds bit-identical
-_EPOCH = (2020, 1, 1, 0, 0, 0)
+sys.path.insert(0, REPO)
 
-
-def build_zip(out_path: str) -> str:
-    os.makedirs(os.path.dirname(out_path) or ".", exist_ok=True)
-    entries: list[tuple[str, str]] = []
-    pkg_root = os.path.join(REPO, PACKAGE)
-    for dirpath, dirnames, filenames in os.walk(pkg_root):
-        dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
-        for fn in sorted(filenames):
-            if fn.endswith((".py", ".yaml")):
-                full = os.path.join(dirpath, fn)
-                entries.append((full, os.path.relpath(full, REPO)))
-    # conf/ travels too: the registry loads conf/strategies.yaml relative to
-    # the package's parent when present
-    conf = os.path.join(REPO, "conf")
-    if os.path.isdir(conf):
-        for fn in sorted(os.listdir(conf)):
-            if fn.endswith(".yaml"):
-                full = os.path.join(conf, fn)
-                entries.append((full, os.path.relpath(full, REPO)))
-    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for full, arc in entries:
-            info = zipfile.ZipInfo(arc, date_time=_EPOCH)
-            info.external_attr = 0o644 << 16
-            with open(full, "rb") as f:
-                zf.writestr(info, f.read(), zipfile.ZIP_DEFLATED)
-    return out_path
-
+from text_extract_api_spark.session import PACKAGE, build_zip  # noqa: E402
 
 if __name__ == "__main__":
     out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "dist", f"{PACKAGE}.zip")

@@ -42,7 +42,8 @@ MULTIPLIER = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "16"))
 INFLATE = int(os.environ.get("SPARK_GRAFT_SCALE_INFLATE", "32"))
 RUNS = int(os.environ.get("SPARK_GRAFT_SCALE_RUNS", "3"))
 SHUFFLE_PARTITIONS = 64  # fixed across levels: parallelism must come from
-# cores only, not a second knob
+# cores only, not a second knob. jobrun.Job.size_shuffles never lowers the
+# pin and raises it only for a corpus over 64 × 64 MB, equally at both levels.
 
 # Pool key: pooled stats are only meaningful over runs of the SAME job +
 # pipeline method + measurement setup. Bump when either changes materially.
@@ -125,10 +126,10 @@ def run_once(sf_dir: str, cores: int, multiplier: int, inflate: int) -> dict:
     out = tempfile.mkdtemp(prefix=f"scale_{cores}_")
     evl = tempfile.mkdtemp(prefix=f"evl_{cores}_")
     env = dict(os.environ)
-    env["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = str(SHUFFLE_PARTITIONS)
-    env["SPARK_GRAFT_EXTRA_CONF"] = json.dumps(
-        {"spark.eventLog.enabled": "true", "spark.eventLog.dir": evl}
-    )
+    env["SPARK_GRAFT_EXTRA_CONF"] = json.dumps({
+        "spark.sql.shuffle.partitions": str(SHUFFLE_PARTITIONS),
+        "spark.eventLog.enabled": "true", "spark.eventLog.dir": evl,
+    })
     # CPU-pin each level to exactly `cores` cores (r3): an UNPINNED local[2]
     # JVM spills GC / Python-worker / commit threads onto idle cores, so "N"
     # silently runs on >N cores and the measured N→4N ratio understates the
