@@ -108,10 +108,10 @@ class Job:
         """Start the summary's ``sec`` window (set-up before it is excluded)."""
         self.t0 = time.time()
 
-    def size_shuffles(self, nbytes: int) -> int:
+    def size_shuffles(self, nbytes: int) -> None:
         """Raise ``spark.sql.shuffle.partitions`` to ``nbytes /
         TARGET_PARTITION_MB + 1``, capped at ``MAX_SHUFFLE_PARTITIONS``;
-        never lower it. Returns the count in force.
+        never lower it.
 
         ``nbytes`` is the measured corpus size, read from an ``Observation``
         riding an action the job runs anyway. The ×256 scale-up probe caught
@@ -130,10 +130,8 @@ class Job:
             MAX_SHUFFLE_PARTITIONS,
             int(nbytes / (TARGET_PARTITION_MB * 1024 * 1024)) + 1,
         )
-        if need <= cur:
-            return cur
-        self.spark.conf.set(key, str(need))
-        return need
+        if need > cur:
+            self.spark.conf.set(key, str(need))
 
     def run_stage(
         self, name: str, write: Callable[[], dict | None]

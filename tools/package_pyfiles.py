@@ -2,9 +2,9 @@
 
 The north rule ships the engine "via spark-submit --py-files" — executors
 (and, in client mode, the driver) import the package from this zip, not
-from a checkout. ``session.build_zip`` decides what goes in it; the same
-builder ships the package automatically on a master with separate
-executor JVMs.
+from a checkout. ``text_extract_api_spark.pyfiles.build_zip`` decides
+what goes in it; the same builder ships the package automatically on a
+master with separate executor JVMs. Needs only the standard library.
 
 Usage:
     python tools/package_pyfiles.py [out_zip]
@@ -17,10 +17,9 @@ from __future__ import annotations
 import os
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from text_extract_api_spark.session import PACKAGE, build_zip  # noqa: E402
+from text_extract_api_spark.pyfiles import PACKAGE, REPO, build_zip  # noqa: E402
 
 if __name__ == "__main__":
     out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "dist", f"{PACKAGE}.zip")
