@@ -33,10 +33,7 @@ from text_extract_api_spark import jobrun  # noqa: E402
 from text_extract_api_spark.checkpoint import bucket_col  # noqa: E402
 from text_extract_api_spark.extractors.media import validate_media_pages  # noqa: E402
 from text_extract_api_spark.io import read_table, table_exists, write_table  # noqa: E402
-from text_extract_api_spark.partitioning import (  # noqa: E402
-    payload_size_col,
-    repartition_by_size,
-)
+from text_extract_api_spark.partitioning import payload_size_col  # noqa: E402
 from text_extract_api_spark.pipeline import run_extract_pipeline  # noqa: E402
 from text_extract_api_spark.synth import synthesize_interleaved_office  # noqa: E402
 
@@ -122,19 +119,10 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         )
         warm.write.format("noop").mode("overwrite").save()
 
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
     def extract(wave_docs):
-        if args.input_table:
-            # Unknown external layout: size-bucketed salted repartition
-            # spreads oversized-media docs before the heavy stages. The
-            # synthesis path skips this: its persisted input is already
-            # hash(doc_id)-partitioned (uniform bytes at scale), the slim
-            # pipeline reuses that alignment for the zero-exchange span
-            # reattach join, and AQE skew-join covers residual outliers —
-            # an up-front full-array shuffle would cost more DRAM traffic
-            # than the skew it prevents (BENCH/BASELINE.md, r3).
-            wave_docs = repartition_by_size(wave_docs, shuffle_n)
+        # Any input layout goes straight in: the pipeline's reattach join
+        # partitions by doc_id whatever the layout, and AQE's skew-join
+        # splitting takes the oversized docs.
         results, _ = run_extract_pipeline(
             spark, wave_docs.select("doc_id", "spans", "bucket"),
             media, cache, args.run_id, office_blobs=office_blobs,

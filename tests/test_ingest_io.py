@@ -17,7 +17,12 @@ from text_extract_api_spark.ingest import (
     read_binary_files,
     sniff_fmt_col,
 )
-from text_extract_api_spark.io import delete_table, list_tables, write_table
+from text_extract_api_spark.io import (
+    delete_table,
+    list_tables,
+    table_exists,
+    write_table,
+)
 
 
 def test_read_binary_files_and_sniff(spark, tmp_path):
@@ -125,6 +130,26 @@ def test_storage_list_delete(spark, tmp_path):
     assert list_tables(spark, base) == ["t2"]
     assert delete_table(spark, f"{base}/t1") is False  # already gone
     assert list_tables(spark, str(tmp_path / "missing")) == []
+
+
+def test_table_exists_answers_missing_without_a_read(spark, tmp_path, monkeypatch):
+    """A missing location is answered by the filesystem, not by a parquet
+    read: the read logs a FileNotFoundException stack trace, and every job
+    into a fresh output dir probes a missing cache. An empty directory
+    still reads as absent, a written table as present."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    write_table(spark.range(3), str(tmp_path / "t"), mode="overwrite")
+    (tmp_path / "empty").mkdir()
+    assert table_exists(spark, str(tmp_path / "t")) is True
+    assert table_exists(spark, str(tmp_path / "empty")) is False
+
+    def no_read(self, *paths, **options):
+        raise AssertionError(f"parquet read of {paths}")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    assert table_exists(spark, str(tmp_path / "missing")) is False
+    assert table_exists(spark, f"file://{tmp_path}/missing/cache") is False
 
 
 def test_bucketed_cache_join_is_shuffle_free(spark, sf_dir, tmp_path):

@@ -6,9 +6,11 @@ The north-rule invariant: per doc_id, strict sequence equality on
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from text_extract_api_spark.pipeline import (
     extract_flat_no_cache,
@@ -218,3 +220,94 @@ def test_every_leg_runs_on_every_core(spark):
     assert len(got) == 401
     assert got["h0007"][1] == ("html", "doc 7 part 1", "", 1)
     assert got["p0000"] == [("pdf", "", "pdf://p0000", 0)]
+
+
+def _final_exchanges(df) -> list[str]:
+    """Run ``df`` and return the arguments of every shuffle that ran: the
+    Exchange nodes of the AQE final plan, minus the ones it reused."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    return [
+        re.sub(r"#\d+|, \[plan_id=\d+\]", "", m)
+        for m in re.findall(r"^[\s:|+\-]*Exchange (.*)$", final, re.M)
+    ]
+
+
+def test_table_input_runs_the_dedup_chain_once(spark, sf_dir, tmp_path):
+    """A parquet read makes ``spans`` nullable. A nullable content_hash let
+    the optimizer push an inferred ``isnotnull`` into the JVM legs but not
+    past the Python leg's mapInPandas, so the legs' dedup chains stopped
+    matching and ran twice. With media pages and office blobs (all three
+    legs), the md5 exchange and the exchange under the legs each run once."""
+    from text_extract_api_spark.io import read_table, write_table
+    from text_extract_api_spark.synth import synthesize_interleaved_office
+
+    tables = dict(
+        zip(("docs", "media", "office"), synthesize_interleaved_office(spark, sf_dir))
+    )
+    for name, df in tables.items():
+        write_table(df, str(tmp_path / name), mode="overwrite")
+    docs, media, office = (read_table(spark, str(tmp_path / n)) for n in tables)
+    assert docs.schema["spans"].nullable
+    results, _ = run_extract_pipeline(
+        spark, docs, media.select("media_ref", "page_no", "page_text"), None,
+        "table", office_blobs=office,
+    )
+    exchanges = _final_exchanges(results)
+    by_hash = [e for e in exchanges if e.startswith("hashpartitioning(content_hash,")]
+    by_num = [e for e in exchanges if "REPARTITION_BY_NUM" in e]
+    assert len(by_hash) == 1, exchanges
+    assert len(by_num) == 1 and by_num[0].startswith("hashpartitioning(key,"), exchanges
+    assert results.count() == docs.count()
+
+
+def test_nullable_table_input_hashes_and_rows(spark, tmp_path):
+    """A parquet-read table holding a doc with null spans, one with [] and
+    two duplicates. Neither the null nor the [] doc gets a result row, with
+    or without a cache; the duplicates share one extraction. Every hash of
+    a non-null payload is the md5 of the canonical payload, so cache
+    tables written by earlier runs keep hitting."""
+    import hashlib
+
+    from text_extract_api_spark.pipeline import RS, US
+    from text_extract_api_spark.schema import SPANS_TYPE
+
+    spans = [("html", "<p>same</p>", "", 1), ("text", "a b", "", 0)]
+    rows = [("n", None), ("e", []), ("d1", spans), ("d2", spans),
+            ("u", [("markdown", "# head", "", 0)])]
+    schema = T.StructType([T.StructField("doc_id", T.StringType(), False),
+                           T.StructField("spans", SPANS_TYPE, True)])
+    loc = str(tmp_path / "docs")
+    spark.createDataFrame(rows, schema).write.parquet(loc)
+    docs = spark.read.parquet(loc)
+
+    hashes = {r["doc_id"]: r["content_hash"] for r in with_content_hash(docs).collect()}
+    for doc_id, doc_spans in rows:
+        if doc_spans is None:
+            assert not hashes[doc_id]
+            continue
+        payload = RS.join(
+            US.join((k, t, m)) for k, t, m, _ in sorted(doc_spans, key=lambda s: s[3])
+        )
+        assert hashes[doc_id] == hashlib.md5(payload.encode()).hexdigest(), doc_id
+
+    def collect(results):
+        return {
+            r["doc_id"]: (r["content_hash"], [tuple(s) for s in r["spans"]], r["from_cache"])
+            for r in results.collect()
+        }
+
+    results, new_cache = run_extract_pipeline(spark, docs, None, None, "cold")
+    cold = collect(results)
+    assert cold == {
+        "d1": (hashes["d1"], [("text", "a b", "", 0), ("html", "same", "", 1)], False),
+        "d2": (hashes["d1"], [("text", "a b", "", 0), ("html", "same", "", 1)], False),
+        "u": (hashes["u"], [("markdown", "head", "", 0)], False),
+    }
+    assert new_cache.count() == 2
+
+    results, new_cache = run_extract_pipeline(spark, docs, None, new_cache, "warm")
+    assert collect(results) == {k: (h, s, True) for k, (h, s, _) in cold.items()}
+    assert new_cache.count() == 0

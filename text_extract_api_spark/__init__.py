@@ -11,8 +11,8 @@ per-document OCR/extraction pipeline), re-expressed Spark-first:
   ``text_extract_api/extract/tasks.py:44-69``) as a left-anti join
 - ordered span reassembly with strict ``(kind, text, media_ref, order)``
   sequence equality
-- per-partition checkpoint/lineage for resumability, salted repartition for
-  media-size skew, AQE everywhere.
+- per-partition checkpoint/lineage for resumability, AQE everywhere
+  (runtime skew-join splitting for media-size skew).
 
 All heavy logic is either JVM-side ``pyspark.sql.functions`` (whole-stage
 codegen) or Arrow-batched pandas UDFs — never per-row Python.

@@ -16,10 +16,6 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-# what a parquet read of a missing or an empty directory raises
-_ABSENT = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-
-
 def iceberg_available(spark: SparkSession) -> bool:
     try:
         spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
@@ -63,16 +59,21 @@ def read_table(spark: SparkSession, location: str) -> DataFrame:
 
 
 def table_exists(spark: SparkSession, location: str) -> bool:
-    """Whether ``location`` holds a table yet. Only a missing or empty
-    directory reads as absent; any other read error (a corrupt file, a
-    permission or IO failure) propagates, so a caller never mistakes a
-    broken table for "no rows yet"."""
+    """Whether ``location`` holds a table yet. A missing location is asked
+    of its filesystem (through the session's Hadoop conf), not read: the
+    read logs a stack trace. An empty directory reads as absent; any other
+    read error (a corrupt file, a permission or IO failure) propagates, so
+    a caller never mistakes a broken table for "no rows yet"."""
     if _is_table_ident(spark, location):
         return spark.catalog.tableExists(location)
+    path = spark._jvm.org.apache.hadoop.fs.Path(location)  # type: ignore[union-attr]
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if not path.getFileSystem(conf).exists(path):
+        return False
     try:
         spark.read.parquet(location)
     except AnalysisException as e:
-        if e.getCondition() in _ABSENT:
+        if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
             return False
         raise
     return True

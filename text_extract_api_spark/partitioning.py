@@ -1,20 +1,14 @@
-"""Skew handling: size-bucketed salted repartitioning.
+"""Per-document payload size.
 
-North-rule requirement: "handles skew from oversized media documents via
-salted repartitioning and adaptive coalesce". The synthesizer inflates ~1%
-of documents 50× (synth.py OVERSIZE knobs) to make this observable.
+``payload_size_col`` is the corpus-size statistic: the jobs sum it in an
+``Observation`` to size their shuffles (``jobrun.Job.size_shuffles``) and
+the progress markers record it per bucket.
 
-Strategy (API-level, no custom Catalyst rule needed — SURVEY.md §4):
-- estimate per-document payload size cheaply (sum of span text UTF-8
-  byte lengths — a codegen'd expression, no Python);
-- size bucket = log2 class of the payload size;
-- salt = pmod(xxhash64(doc_id), S) so heavy docs of the same size class
-  spread across S partitions;
-- repartition on (size_bucket, salt) → each output partition carries a
-  bounded byte volume instead of a bounded row count.
-
-AQE (enabled in session.py) then coalesces the small ones back and splits
-stragglers at shuffle time.
+Skew from oversized media documents (the synthesizer inflates ~1% of
+documents 50×, synth.py) is left to AQE's runtime skew-join splitting and
+coalescing (session.py). No job salts its input: the pipeline's reattach
+join re-partitions by ``doc_id`` whatever the input layout, so a salted
+pre-shuffle would be undone by the next exchange.
 """
 
 from __future__ import annotations
@@ -33,6 +27,10 @@ def payload_size_col() -> F.Column:
 
 
 def repartition_by_size(docs: DataFrame, num_partitions: int, salt_buckets: int = 16) -> DataFrame:
+    """Repartition on (log2 size class, pmod(xxhash64(doc_id), salt_buckets)).
+
+    No job calls this; only the benchmark's ``partitioning`` trace layer
+    still does, and it goes with that layer."""
     sized = docs.withColumn("_bytes", payload_size_col())
     bucketed = sized.withColumn(
         "_size_bucket",

@@ -65,7 +65,8 @@ def sorted_spans(spans_col):
 
 def content_hash_col(spans_col) -> F.Column:
     """md5 over the canonical ordered payload — the engine's analog of the
-    reference's ``md5(binary)`` cache key (file_format.py:109-110)."""
+    reference's ``md5(binary)`` cache key (file_format.py:109-110). A doc
+    with null ``spans`` hashes to ''."""
     payload = F.array_join(
         F.transform(
             sorted_spans(spans_col),
@@ -73,7 +74,12 @@ def content_hash_col(spans_col) -> F.Column:
         ),
         RS,
     )
-    return F.md5(payload)
+    # Non-nullable on purpose. A parquet read makes ``spans`` nullable; a
+    # nullable hash lets the optimizer push an inferred
+    # ``isnotnull(content_hash)`` into the JVM legs' subtree but not past
+    # the Python leg's mapInPandas, so the legs' copies of the dedup chain
+    # stop matching and Spark runs it twice instead of reusing one exchange.
+    return F.coalesce(F.md5(payload), F.lit(""))
 
 
 def with_content_hash(docs: DataFrame) -> DataFrame:

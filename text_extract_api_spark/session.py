@@ -9,7 +9,7 @@ chosen to survive a 1000-executor / 100 TB deployment:
   job that knows its corpus size raises it from there
   (``jobrun.Job.size_shuffles``).
 - AQE on (runtime coalesce + skew-join splitting) — the engine's media-size
-  skew handling leans on this plus explicit salting (partitioning.py).
+  skew handling is this runtime splitting, not a static salted layout.
 - Arrow batch size bounded so one oversized media document cannot blow up a
   Python worker (the reference bounds the same risk with Celery
   ``worker_max_memory_per_child``, celery_app.py:20-22).

@@ -20,7 +20,7 @@ Synthesis rules (mirrored 1:1 by the DuckDB oracle SQL in
   the content-hash cache dedup join (the reference's Redis memoization,
   ``extract/tasks.py:44-69``).
 - ``doc_id % 97 == 0`` docs get their text spans inflated 50× — the
-  oversized-media skew knob (north rule: salted repartitioning).
+  oversized-media skew knob (AQE skew-join splitting, session.py).
 - ``pdf`` spans carry no inline text; their "pages" live in the sidecar
   ``media_pages`` table (1-based page order, mirroring
   ``converters/pdf_to_jpeg.py:16``) as two halves of the chunk.
