@@ -9,10 +9,16 @@ order) per doc (the north-rule invariant).
 from __future__ import annotations
 
 import re
+from unittest import mock
 
 import pandas as pd
 
-from text_extract_api_spark.extractors.html import extract_main_content_py
+from text_extract_api_spark.extractors import markdown
+from text_extract_api_spark.extractors.html import (
+    MAX_LINK_DENSITY,
+    MIN_WORDS,
+    _BlockParser,
+)
 from text_extract_api_spark.extractors.pii import PII_PATTERNS, TOKEN
 from text_extract_api_spark.synth import (
     CHUNK,
@@ -41,6 +47,56 @@ def anonymize(s: str) -> str:
     for _, pat in PII_PATTERNS:
         s = re.sub(pat, TOKEN, s)
     return s
+
+
+class RegexBlockParser(_BlockParser):
+    """``_BlockParser`` with its original regex whitespace passes, frozen
+    as the reference of the differential tests: the package's parser
+    collapses with ``normalize_ws`` and counts with ``str.count``."""
+
+    def _flush(self) -> None:
+        text = _WS.sub(" ", "".join(self._buf)).strip(" \t\r\n")
+        if text:
+            self.blocks.append((text, self._total_chars, self._link_chars))
+        self._buf = []
+        self._link_chars = 0
+        self._total_chars = 0
+
+    def handle_data(self, data: str) -> None:
+        if self._kill_depth or not data:
+            return
+        self._buf.append(data)
+        stripped = len(_WS.sub("", data))
+        self._total_chars += stripped
+        if self._a_depth:
+            self._link_chars += stripped
+
+
+def main_content(html: str) -> str:
+    """Reference of ``extract_main_content_py``: the same block scoring
+    over :class:`RegexBlockParser`."""
+    if not html:
+        return ""
+    parser = RegexBlockParser()
+    try:
+        parser.feed(html)
+        parser.close()
+    except Exception:
+        return ""
+    return "\n".join(
+        text
+        for text, total, link_chars in parser.blocks
+        if total > 0
+        and link_chars / total <= MAX_LINK_DENSITY
+        and len(text.split(" ")) >= MIN_WORDS
+    )
+
+
+def html_to_markdown(html: str) -> str:
+    """Reference of ``html_to_markdown_py``: its parser with the regex
+    collapse (``norm``) in place of ``normalize_ws``."""
+    with mock.patch.object(markdown, "normalize_ws", norm):
+        return markdown.html_to_markdown_py(html)
 
 
 def strip_md(s: str) -> str:
@@ -82,7 +138,7 @@ def extract_span(kind: str, text: str, media_ref: str, chunk: str):
     if kind == "text" or kind == "pii_text":
         out = anonymize(norm(text))
     elif kind == "html":
-        out = anonymize(norm(extract_main_content_py(text)))
+        out = anonymize(norm(main_content(text)))
     elif kind == "markdown":
         out = anonymize(strip_md(text))
     elif kind == "pdf":

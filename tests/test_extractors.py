@@ -148,6 +148,50 @@ def test_pii_anonymize(spark, raw, expected):
     assert df.collect()[0][0] == expected
 
 
+def _pii_dense_strings(n: int, seed: int) -> list[str | None]:
+    """Strings built from PII shapes, their near misses and the characters
+    the guards look at ('@', digits, '-', '.', '+') plus non-ASCII text."""
+    import random
+
+    rng = random.Random(seed)
+    pieces = [
+        "bob@example.com", "a.b+c@ex-ample.co", "x@y", "@", "@@", "user@host.",
+        "123-45-6789", "123-4567-89-1234", "+1-555-123-4567", "+44-555-123-4567",
+        "555.123.4567", "555-123.4567", "555-1234", "55-1234", "1-2", "1.2",
+        "9.-9", "12.34", "-", ".", "+", " ", "0", "42", "é", "中文", "ANONYMIZED",
+    ]
+    out: list[str | None] = [None, ""]
+    for _ in range(n):
+        k = rng.randint(1, 6)
+        out.append("".join(rng.choice(pieces) for _ in range(k)))
+    return out
+
+
+def test_pii_guarded_chain_matches_plain_chain(spark):
+    """``anonymize_col`` skips passes by its guards; the output must be
+    the plain chained ``regexp_replace`` output on every row."""
+    from text_extract_api_spark.extractors.pii import PII_PATTERNS, TOKEN
+
+    df = spark.createDataFrame([(t,) for t in _pii_dense_strings(20_000, 7)], "t string")
+    plain = F.col("t")
+    for _, pat in PII_PATTERNS:
+        plain = F.regexp_replace(plain, pat, TOKEN)
+    got = df.select(
+        F.col("t"), anonymize_col(F.col("t")).alias("guarded"), plain.alias("plain")
+    )
+    stats = got.agg(
+        F.count(F.when(~F.col("guarded").eqNullSafe(F.col("plain")), 1)).alias("diff"),
+        F.count(F.when(F.col("plain") != F.col("t"), 1)).alias("altered"),
+        F.count(F.when(F.instr("t", "@") == 0, 1)).alias("no_at"),
+        F.count(F.when(~F.col("t").rlike("[0-9][-.][0-9]"), 1)).alias("no_sep"),
+        F.count(F.lit(1)).alias("n"),
+    ).collect()[0]
+    assert stats["diff"] == 0
+    # dense enough to exercise the chain, with rows on each side of each guard
+    assert stats["altered"] > stats["n"] // 2
+    assert 0 < stats["no_at"] < stats["n"] and 0 < stats["no_sep"] < stats["n"]
+
+
 def test_pii_idempotent(spark):
     raw = "x bob@example.com y 123-45-6789 z"
     df = spark.createDataFrame([(raw,)], "t string").select(

@@ -121,15 +121,20 @@ def test_validate_images_quarantine_split(spark):
 
 
 def test_storage_list_delete(spark, tmp_path):
-    base = str(tmp_path / "warehouse")
-    df = spark.range(5).select(F.col("id"))
-    write_table(df, f"{base}/t1", mode="overwrite")
-    write_table(df, f"{base}/t2", mode="overwrite")
-    assert list_tables(spark, base) == ["t1", "t2"]
-    assert delete_table(spark, f"{base}/t1") is True
-    assert list_tables(spark, base) == ["t2"]
-    assert delete_table(spark, f"{base}/t1") is False  # already gone
+    """A plain path and a ``file://`` URI both list and delete through the
+    session's Hadoop FileSystem, as ``s3a://`` and ``hdfs://`` locations
+    must (an ``os.path`` listing saw no directory at a URI)."""
+    for base in (str(tmp_path / "wh_path"), (tmp_path / "wh_uri").as_uri()):
+        df = spark.range(5).select(F.col("id"))
+        write_table(df, f"{base}/t1", mode="overwrite")
+        write_table(df, f"{base}/t2", mode="overwrite")
+        assert list_tables(spark, base) == ["t1", "t2"]
+        assert delete_table(spark, f"{base}/t1") is True
+        assert list_tables(spark, base) == ["t2"]
+        assert delete_table(spark, f"{base}/t1") is False  # already gone
+    assert not (tmp_path / "wh_uri" / "t1").exists()
     assert list_tables(spark, str(tmp_path / "missing")) == []
+    assert list_tables(spark, (tmp_path / "missing").as_uri()) == []
 
 
 def test_table_exists_answers_missing_without_a_read(spark, tmp_path, monkeypatch):

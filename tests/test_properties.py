@@ -4,16 +4,25 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from text_extract_api_spark.extractors.html import extract_main_content_py
+from text_extract_api_spark.extractors.markdown import html_to_markdown_py
 from text_extract_api_spark.extractors.office import make_docx, make_pptx
+from text_extract_api_spark.extractors.pii import (
+    PII_PATTERNS,
+    TOKEN,
+    _DIGIT_SEP_RE,
+)
 from text_extract_api_spark.extractors.strategies import (
     html_main_content,
     html_markdown,
     office_docx,
     office_pptx,
 )
+from text_extract_api_spark.extractors.text import normalize_ws
+from tests import oracle
 from tests.oracle import anonymize, norm, strip_md
 
 text_st = st.text(
@@ -131,3 +140,85 @@ def test_office_span_fns_total_on_mutated_ooxml(texts, cut, flips):
         bad = _mutated(data, cut, flips)
         for fn in _OFFICE_FNS:
             assert isinstance(fn("", bad), str)
+
+
+# Differential tests of the regex-free whitespace passes against their
+# frozen regex versions (tests/oracle.py). Generated HTML mixes tags,
+# character references (named, numeric, malformed), the engine's whitespace
+# class, whitespace outside it (\x0b, \f, NBSP, U+3000, \x1c) and
+# non-ASCII text.
+_WS_CHARS = " \t\r\n\x0b\f\xa0\u3000\x1c"
+_TEXT_ST = st.text(
+    alphabet=st.sampled_from(_WS_CHARS + "ab Zé中д😀@-.09")
+    | st.characters(exclude_characters="<&"),
+    max_size=30,
+)
+_TAG_ST = st.sampled_from(
+    [
+        f"<{t}>" for t in "p div li h2 td blockquote strong em b i span ul body".split()
+    ]
+    + [
+        f"</{t}>" for t in "p div li h2 td blockquote strong em b i span ul a".split()
+    ]
+    + [
+        "<a href='/x'>",
+        "<a href=\"\">",
+        "<a>",
+        "<br>",
+        "<br/>",
+        "<nav>",
+        "</nav>",
+        "<script>",
+        "</script>",
+        "<style>x{}</style>",
+        "<!-- c -->",
+        "<p\tclass=x\n>",
+        "</",
+        "<",
+    ]
+)
+_CHARREF_ST = st.sampled_from(
+    "&amp; &lt; &nbsp; &#160; &#x3000; &#9; &#10; &#13; &#11; &#12; &#32; "
+    "&eacute; &#x1F600; &bogus; &#; & &amp".split(" ")
+)
+# a block whose link density sits near MAX_LINK_DENSITY, so that a
+# miscounted whitespace character flips whether it is kept
+_WS_RUN_ST = st.text(alphabet=st.sampled_from(_WS_CHARS), max_size=8)
+_LINK_BLOCK_ST = st.tuples(_TEXT_ST | _WS_RUN_ST, _TEXT_ST, _TEXT_ST | _WS_RUN_ST).map(
+    lambda t: f"<p>{t[0]}<a href='/x'>{t[1]}</a>{t[2]}</p>"
+)
+_HTML_ST = st.lists(
+    st.one_of(_TAG_ST, _CHARREF_ST, _TEXT_ST, _LINK_BLOCK_ST), max_size=40
+).map("".join)
+
+
+@settings(max_examples=500, deadline=2000)
+@given(st.text(alphabet=st.sampled_from(_WS_CHARS + "ab中"), max_size=80) | st.text())
+def test_normalize_ws_matches_regex(s):
+    assert normalize_ws(s) == norm(s)
+
+
+@settings(max_examples=300, deadline=2000)
+@given(_HTML_ST)
+def test_html_fns_match_regex_reference(html):
+    html_span = html_main_content().py_fn
+    assert extract_main_content_py(html) == oracle.main_content(html)
+    assert html_span(html, None) == norm(oracle.main_content(html))
+    assert html_to_markdown_py(html) == oracle.html_to_markdown(html)
+
+
+# anonymize_col skips the email pass on text without '@' and the digit
+# passes on text without _DIGIT_SEP_RE (extractors/pii.py). That is exact
+# only while every match of each pattern holds its guard; a new or edited
+# pattern that breaks it fails here instead of leaving PII unmasked.
+@pytest.mark.parametrize("name,pat", PII_PATTERNS, ids=[n for n, _ in PII_PATTERNS])
+@settings(max_examples=200, deadline=2000)
+@given(data=st.data())
+def test_pii_pattern_matches_hold_their_guard(name, pat, data):
+    assert PII_PATTERNS[0][0] == "email"
+    assert not re.search("[0-9@]", TOKEN)
+    s = data.draw(st.from_regex(pat, fullmatch=True))
+    if name == "email":
+        assert "@" in s
+    else:
+        assert re.search(_DIGIT_SEP_RE, s)

@@ -21,14 +21,19 @@ of the ``html`` strategy (extractors/strategies.py), run in the pipeline's
 one Arrow-batched Python leg. This is the designated slow path — pure
 Python, but batched, no per-row Spark overhead, and the parser is
 O(len(html)).
+
+The whitespace passes use no regex, for speed: a block's text is
+collapsed by ``text.normalize_ws`` (``str.replace``) and its
+non-whitespace length is ``len`` minus ``str.count`` of the four class
+characters. A differential test pins the output to the regex version's
+(``tests/oracle.py``). Most of a span's time is ``html.parser`` itself.
 """
 
 from __future__ import annotations
 
-import re
 from html.parser import HTMLParser
 
-_WS_RE = re.compile(r"[ \t\r\n]+")
+from .text import normalize_ws
 
 # Tags whose entire subtree is boilerplate by construction.
 KILL_TAGS = frozenset(
@@ -62,10 +67,10 @@ class _BlockParser(HTMLParser):
         self._a_depth = 0
 
     def _flush(self) -> None:
-        # strip EXACTLY the engine's whitespace class: bare .strip() trims
-        # all Unicode whitespace (\x0b, \f, NBSP…) — diverges from the JVM/
-        # DuckDB trim discipline on exotic-whitespace payloads
-        text = _WS_RE.sub(" ", "".join(self._buf)).strip(" \t\r\n")
+        # collapse and strip EXACTLY the engine's whitespace class: bare
+        # .strip() trims all Unicode whitespace (\x0b, \f, NBSP…) — diverges
+        # from the JVM/DuckDB trim discipline on exotic-whitespace payloads
+        text = normalize_ws("".join(self._buf))
         if text:
             self.blocks.append((text, self._total_chars, self._link_chars))
         self._buf = []
@@ -102,7 +107,14 @@ class _BlockParser(HTMLParser):
         if self._kill_depth or not data:
             return
         self._buf.append(data)
-        stripped = len(_WS_RE.sub("", data))
+        # chars outside the engine's whitespace class [ \t\r\n]
+        stripped = (
+            len(data)
+            - data.count(" ")
+            - data.count("\t")
+            - data.count("\r")
+            - data.count("\n")
+        )
         self._total_chars += stripped
         if self._a_depth:
             self._link_chars += stripped

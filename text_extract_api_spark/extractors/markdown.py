@@ -26,8 +26,8 @@ Contract (deterministic, mirrored exactly by the DuckDB oracle in
    only added on a matching close);
 4. whitespace: every emitted fragment is collapsed ``[ \\t\\r\\n]+`` → one
    space and stripped with the engine's whitespace class (``' \\t\\r\\n'``,
-   NOT bare ``.strip()`` — see extractors/html.py); empty blocks are
-   dropped;
+   NOT bare ``.strip()`` — see extractors/html.py) by ``text.normalize_ws``,
+   the one collapse of every Python span; empty blocks are dropped;
 5. no Markdown metachar escaping (``*``, ``[`` … in source text pass
    through verbatim) and no table assembly (``td``/``th`` degrade to
    paragraph blocks) — both documented limitations, not bugs;
@@ -40,7 +40,6 @@ vectorized at the batch level, parser is O(len(html)).
 
 from __future__ import annotations
 
-import re
 from html.parser import HTMLParser
 
 import pandas as pd
@@ -48,15 +47,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .html import BLOCK_TAGS, KILL_TAGS, _VOID
-
-_WS_RE = re.compile(r"[ \t\r\n]+")
+from .text import normalize_ws
 
 _HEADINGS = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
 _INLINE_MARKS = {"strong": "**", "b": "**", "em": "*", "i": "*"}
-
-
-def _collapse(s: str) -> str:
-    return _WS_RE.sub(" ", s).strip(" \t\r\n")
 
 
 class _MarkdownParser(HTMLParser):
@@ -75,7 +69,7 @@ class _MarkdownParser(HTMLParser):
     # -- block machinery ---------------------------------------------------
     def _flush(self) -> None:
         # open inline frames degrade to plain text: join raw segments
-        text = _collapse("".join(self._segs))
+        text = normalize_ws("".join(self._segs))
         self._segs = []
         self._inline = []
         if text:
@@ -125,7 +119,7 @@ class _MarkdownParser(HTMLParser):
                 t, start, href = self._inline[i]
                 if t != tag:
                     continue
-                inner = _collapse("".join(self._segs[start:]))
+                inner = normalize_ws("".join(self._segs[start:]))
                 del self._segs[start:]
                 del self._inline[i:]  # frames opened inside also end here
                 if inner:
@@ -228,7 +222,7 @@ class _LinkParser(HTMLParser):
             return
         if tag == "a" and self._a:
             idx, href, segs = self._a.pop()
-            self.links[idx] = (href, _collapse("".join(segs)))
+            self.links[idx] = (href, normalize_ws("".join(segs)))
 
     def handle_data(self, data: str) -> None:
         if self._skip_depth or not data or not self._a:
@@ -240,7 +234,7 @@ class _LinkParser(HTMLParser):
         # unclosed anchors keep whatever text accumulated
         while self._a:
             idx, href, segs = self._a.pop()
-            self.links[idx] = (href, _collapse("".join(segs)))
+            self.links[idx] = (href, normalize_ws("".join(segs)))
 
 
 def extract_links_py(html: str) -> list[tuple[str, str]]:

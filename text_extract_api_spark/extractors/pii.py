@@ -13,6 +13,23 @@ mangle). The patterns are applied as chained global replaces in that
 priority order — see the note above ``PII_PATTERNS`` for why a single
 alternation would break the invariant. Patterns are restricted to syntax
 with identical semantics in Java regex (Spark) and RE2 (the DuckDB oracle).
+
+``anonymize_col`` guards the chain so that most rows skip the regex
+engine, with the plain chain's output on every row:
+
+- the email pass runs only when the text contains ``@``: every email match
+  contains one;
+- the four digit passes run only when the email pass's output matches
+  ``[0-9][-.][0-9]``: every match of ``ssn``, ``intl_phone``, ``us_phone``
+  and ``short_phone`` contains a digit, then ``-`` or ``.``, then a digit.
+  Without such a substring none of them matches, and no pass can create
+  one for a later pass, because ``TOKEN`` contains no digit.
+
+A text that holds both an email and a phone pays the two guard scans on
+top of the full chain; text without PII (most of a crawl) pays only the
+two scans. ``anonymize_sql`` (the DuckDB oracle) stays the plain chain.
+A new pattern must keep to these guards; ``tests/test_properties.py``
+fails if one does not.
 """
 
 from __future__ import annotations
@@ -40,11 +57,22 @@ PII_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
+# Every match of a pattern after the email contains a digit, then '-' or
+# '.', then a digit (tests/test_properties.py checks each pattern).
+_DIGIT_SEP_RE = "[0-9][-.][0-9]"
+
+
 def anonymize_col(c: Column) -> Column:
-    out = c
-    for _, pat in PII_PATTERNS:
-        out = F.regexp_replace(out, pat, TOKEN)
-    return out
+    """The chained replaces of ``PII_PATTERNS``, each run only on rows it
+    can change (see the module docstring): same output as the plain chain."""
+    (_, email), *digit_patterns = PII_PATTERNS
+    out = F.when(
+        F.instr(c, "@") > 0, F.regexp_replace(c, email, TOKEN)
+    ).otherwise(c)
+    masked = out
+    for _, pat in digit_patterns:
+        masked = F.regexp_replace(masked, pat, TOKEN)
+    return F.when(out.rlike(_DIGIT_SEP_RE), masked).otherwise(out)
 
 
 def anonymize_sql(expr: str) -> str:

@@ -58,6 +58,15 @@ def read_table(spark: SparkSession, location: str) -> DataFrame:
     return spark.read.parquet(location)
 
 
+def _hadoop_path(spark: SparkSession, location: str):
+    """``(FileSystem, Path)`` of ``location`` through the session's Hadoop
+    conf, so ``file://``, ``hdfs://`` and ``s3a://`` locations resolve like
+    the Spark reads and writes of the same location do."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(location)  # type: ignore[union-attr]
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return path.getFileSystem(conf), path
+
+
 def table_exists(spark: SparkSession, location: str) -> bool:
     """Whether ``location`` holds a table yet. A missing location is asked
     of its filesystem (through the session's Hadoop conf), not read: the
@@ -66,9 +75,8 @@ def table_exists(spark: SparkSession, location: str) -> bool:
     a caller never mistakes a broken table for "no rows yet"."""
     if _is_table_ident(spark, location):
         return spark.catalog.tableExists(location)
-    path = spark._jvm.org.apache.hadoop.fs.Path(location)  # type: ignore[union-attr]
-    conf = spark._jsparkSession.sessionState().newHadoopConf()
-    if not path.getFileSystem(conf).exists(path):
+    fs, path = _hadoop_path(spark, location)
+    if not fs.exists(path):
         return False
     try:
         spark.read.parquet(location)
@@ -112,7 +120,8 @@ def list_tables(spark: SparkSession, base: str) -> list[str]:
     local_filesystem.py:42-50 glob / aws_s3.py list_objects).
 
     ``base`` is an Iceberg namespace (``cat.db``) or a filesystem directory
-    (fallback: immediate subdirectories holding parquet data). A bare name
+    (fallback: immediate subdirectories holding parquet data, listed through
+    the session's Hadoop ``FileSystem``). A bare name
     that is not a known namespace (e.g. a relative directory) falls through
     to the filesystem listing instead of raising."""
     if "://" not in base and "/" not in base and iceberg_available(spark):
@@ -120,14 +129,11 @@ def list_tables(spark: SparkSession, base: str) -> list[str]:
             return [r.tableName for r in spark.sql(f"SHOW TABLES IN {base}").collect()]
         except Exception:
             pass  # not a catalog namespace — treat as a directory below
-    import os
-
-    if not os.path.isdir(base):
+    fs, path = _hadoop_path(spark, base)
+    if not (fs.exists(path) and fs.getFileStatus(path).isDirectory()):
         return []
     return sorted(
-        name
-        for name in os.listdir(base)
-        if os.path.isdir(os.path.join(base, name))
+        st.getPath().getName() for st in fs.listStatus(path) if st.isDirectory()
     )
 
 
@@ -137,17 +143,15 @@ def delete_table(spark: SparkSession, location: str) -> bool:
     aws_s3.py delete_object). Returns True if something was removed.
 
     Iceberg path: ``DROP TABLE``; fallback: recursive directory removal
-    (parquet tables are directories)."""
+    through the session's Hadoop ``FileSystem`` (parquet tables are
+    directories)."""
     if _is_table_ident(spark, location):
         # report whether anything was actually removed (ADVICE r2: the
         # unconditional True contradicted the filesystem branch's contract)
         existed = spark.catalog.tableExists(location)
         spark.sql(f"DROP TABLE IF EXISTS {location}")
         return existed
-    import shutil
-    import os
-
-    if os.path.isdir(location):
-        shutil.rmtree(location)
-        return True
+    fs, path = _hadoop_path(spark, location)
+    if fs.exists(path) and fs.getFileStatus(path).isDirectory():
+        return bool(fs.delete(path, True))
     return False
