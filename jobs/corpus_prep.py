@@ -54,14 +54,13 @@ from text_extract_api_spark.functions.prep import (  # noqa: E402
 )
 from text_extract_api_spark.io import read_table, write_table  # noqa: E402
 
+# the manifest's shard count: prep_manifest assigns it and the write
+# clusters by it
+N_SHARDS = 8
+
 
 def main(argv: list[str] | None = None, spark=None) -> dict:
-    ap = jobrun.arg_parser("prep-0", waves=True)
-    ap.add_argument("--neardup-threshold", type=float, default=0.82)
-    ap.add_argument("--quality-min", type=float, default=0.45)
-    ap.add_argument("--quota", type=int, default=40)
-    ap.add_argument("--n-shards", type=int, default=8)
-    args = ap.parse_args(argv)
+    args = jobrun.arg_parser("prep-0", waves=True).parse_args(argv)
     job = jobrun.Job("corpus_prep", args, spark)
     spark = job.spark
 
@@ -76,18 +75,16 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
 
     # ---- stage 1: global near-dup membership -----------------------------
     job.run_stage("noncanon", lambda: write_table(
-        noncanonical_docs(docs, args.neardup_threshold).coalesce(8),
+        noncanonical_docs(docs).coalesce(8),
         noncanon_loc, mode="overwrite",
     ))
     noncanon = read_table(spark, noncanon_loc)
 
     # ---- stage 2: per-doc verdicts, wave-resumable -----------------------
     def verdicts(wave_docs):
-        return funnel_verdicts(
-            wave_docs, quality_min=args.quality_min, noncanon=noncanon,
-        ).join(wave_docs.select("doc_id", "bucket"), "doc_id").select(
-            "doc_id", "verdict", "bucket"
-        )
+        return funnel_verdicts(wave_docs, noncanon=noncanon).join(
+            wave_docs.select("doc_id", "bucket"), "doc_id"
+        ).select("doc_id", "verdict", "bucket")
 
     totals = job.run_waves(
         docs.withColumn("bucket", bucket_col(F.col("doc_id"), args.n_buckets)),
@@ -107,14 +104,12 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
 
     # ---- stage 4: quota + shard manifest ----------------------------------
     def write_manifest():
-        manifest = prep_manifest(
-            docs, all_verdicts, quota=args.quota, n_shards=args.n_shards
-        )
+        manifest = prep_manifest(docs, all_verdicts, n_shards=N_SHARDS)
         # cluster by the partition column before the partitioned write —
         # otherwise every task sprays one file per shard dir and the serial
         # driver commit dominates
         write_table(
-            manifest.repartition(args.n_shards, "shard"),
+            manifest.repartition(N_SHARDS, "shard"),
             manifest_loc, mode="overwrite", partition_by=["shard"],
         )
         return {"docs": read_table(spark, manifest_loc).count()}

@@ -17,11 +17,11 @@ order training loaders consume.
 Stage layout and resume semantics (progress markers in ``out/progress``):
 
 1. **hotspans** (global, ``stage:`` marker): the corpus-wide state — md5
-   fingerprints of text-span payloads recurring in ``--boiler-min-docs``+
-   DISTINCT documents, plus media refs recurring in
-   ``--media-hot-min-docs``+ (the OBELICS logo/icon signal). The signals
-   that depend on every other document; materialized once so the verdict
-   pass becomes doc-local (the ``noncanon`` pattern).
+   fingerprints of text-span payloads recurring in 2+ DISTINCT documents,
+   plus media refs recurring in ``MEDIA_HOT_MIN_DOCS``+ (the OBELICS
+   logo/icon signal). The signals that depend on every other document;
+   materialized once so the verdict pass becomes doc-local (the
+   ``noncanon`` pattern).
 2. **verdicts** (wave-resumable, per-bucket ``done`` markers): per-doc
    keep/reject verdicts with reasons (no_media / not_interleaved /
    unanchored / boilerplate / hot_media) in ``--waves`` wave groups, each
@@ -30,7 +30,8 @@ Stage layout and resume semantics (progress markers in ``out/progress``):
    recomputes any other wave whole, so a crash re-does at most one wave
    and never duplicates rows or markers.
 3. **rejects** (global): the reject table, queryable by reason.
-4. **manifest** (global): keep docs → ``epoch_shuffle`` → the
+4. **manifest** (global): keep docs → ``epoch_shuffle`` (its default
+   seed, so the permutation does not depend on the run id) → the
    (doc_id, shard, pos) loader manifest partitioned by shard; zero RNG, so
    a resumed run regenerates the identical permutation.
 5. **snapshot** (global): the cleaned corpus itself — kept docs' spans
@@ -67,28 +68,18 @@ from text_extract_api_spark.functions.interleave import (  # noqa: E402
 from text_extract_api_spark.functions.sampling import epoch_shuffle  # noqa: E402
 from text_extract_api_spark.io import read_table, write_table  # noqa: E402
 from text_extract_api_spark.partitioning import payload_size_col  # noqa: E402
-from text_extract_api_spark.synth import (  # noqa: E402
-    synth_flat_spans,
-    synthesize_interleaved,
-)
+from text_extract_api_spark.synth import synthesize_interleaved  # noqa: E402
+
+# the manifest's and snapshot's shard count: epoch_shuffle assigns it and
+# both writes cluster by it
+N_SHARDS = 8
+# 2, not media_reuse_stats' generic 3: the synth corpus's only media reuse
+# is the eff_id-sharing duplicate pairs (n_docs never exceeds 2)
+MEDIA_HOT_MIN_DOCS = 2
 
 
 def main(argv: list[str] | None = None, spark=None) -> dict:
     ap = jobrun.arg_parser("mmprep-0", waves=True)
-    ap.add_argument("--boiler-min-docs", type=int, default=2)
-    ap.add_argument("--boiler-max-pct", type=int, default=50)
-    # 2, not the operator's generic 3: the synth corpus's only media reuse
-    # is the eff_id-sharing duplicate pairs (n_docs never exceeds 2)
-    ap.add_argument("--media-hot-min-docs", type=int, default=2)
-    ap.add_argument("--media-hot-max-pct", type=int, default=50)
-    ap.add_argument("--min-transitions", type=int, default=2)
-    ap.add_argument("--max-media-run", type=int, default=2)
-    ap.add_argument("--min-adj-pct", type=int, default=50)
-    ap.add_argument("--n-shards", type=int, default=8)
-    # run-id-INDEPENDENT on purpose: resubmitting under a new run id must
-    # not silently change the epoch permutation (and the crash-resume test
-    # compares manifests across run ids)
-    ap.add_argument("--epoch-seed", default="epoch0")
     ap.add_argument("--multiplier", type=int, default=1,
                     help="deterministic corpus scale-up for scaling benches")
     ap.add_argument("--inflate", type=int, default=1,
@@ -104,10 +95,11 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     manifest_loc = f"{args.out}/manifest"
     snapshot_loc = f"{args.out}/snapshot"
 
-    # The interleaved corpus (Iceberg-scan stand-in). localCheckpoint both
-    # shapes once: four stages consume them and the synthesis subtree
-    # would otherwise replay per stage. The first checkpoint also observes
-    # the corpus size, which sizes the shuffles of every stage after it.
+    # The interleaved corpus (Iceberg-scan stand-in). localCheckpoint it
+    # once: every stage consumes it and the synthesis subtree would
+    # otherwise replay per stage. The checkpoint also observes the corpus
+    # size, which sizes the shuffles of every stage after it. The flat
+    # span table is a narrow explode of the checkpointed nested one.
     docs_nested, _ = synthesize_interleaved(
         spark, args.sf_dir, args.multiplier, args.inflate
     )
@@ -116,11 +108,9 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         corpus, F.sum(payload_size_col()).alias("bytes")
     ).localCheckpoint()
     job.size_shuffles(corpus.get["bytes"] or 0)
-    flat = synth_flat_spans(
-        spark, args.sf_dir, args.multiplier, args.inflate
-    ).select(
-        "doc_id", "offset", "kind", "text", "media_ref"
-    ).localCheckpoint()
+    flat = docs_nested.select("doc_id", F.explode("spans").alias("s")).select(
+        "doc_id", "s.offset", "s.kind", "s.text", "s.media_ref"
+    )
     job.start_clock()
 
     # ---- stage 1: corpus-global boilerplate fingerprints -----------------
@@ -132,7 +122,9 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         hot = (
             texts.groupBy("fp")
             .agg(F.count_distinct("doc_id").alias("n_docs"))
-            .filter(F.col("n_docs") >= args.boiler_min_docs)
+            # strip_boilerplate_apply's min_docs: the snapshot must equal
+            # that operator's output
+            .filter(F.col("n_docs") >= 2)
         )
         write_table(hot.coalesce(8), hotspans_loc, mode="overwrite")
         # the media half of the same corpus-global stage: refs recurring
@@ -140,7 +132,7 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         # deterministic overwrites under ONE marker — a crash between them
         # re-does the whole stage onto identical bytes.
         hot_media = media_reuse_stats(
-            flat, hot_min_docs=args.media_hot_min_docs
+            flat, hot_min_docs=MEDIA_HOT_MIN_DOCS
         ).filter(F.col("is_hot")).select("media_ref")
         write_table(hot_media.coalesce(8), hotmedia_loc, mode="overwrite")
 
@@ -154,15 +146,7 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
             wave_nested.select("doc_id"), "doc_id", "left_semi"
         )
         return mm_funnel_verdicts(
-            wave_nested,
-            wave_flat,
-            hot_fps,
-            min_transitions=args.min_transitions,
-            max_media_run=args.max_media_run,
-            min_adj_pct=args.min_adj_pct,
-            boiler_max_pct=args.boiler_max_pct,
-            hot_refs=hot_refs,
-            media_hot_max_pct=args.media_hot_max_pct,
+            wave_nested, wave_flat, hot_fps, hot_refs=hot_refs
         ).join(wave_nested.select("doc_id", "bucket"), "doc_id").select(
             "doc_id", "verdict", "boiler_pct", "bucket"
         )
@@ -188,11 +172,9 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     # ---- stage 4: deterministic epoch-order manifest ---------------------
     def write_manifest():
         kept = all_verdicts.filter(F.col("verdict") == "keep").select("doc_id")
-        manifest = epoch_shuffle(
-            kept, n_shards=args.n_shards, seed=args.epoch_seed
-        )
+        manifest = epoch_shuffle(kept, n_shards=N_SHARDS)
         write_table(
-            manifest.repartition(args.n_shards, "shard"),
+            manifest.repartition(N_SHARDS, "shard"),
             manifest_loc, mode="overwrite", partition_by=["shard"],
         )
         return {"docs": read_table(spark, manifest_loc).count()}
@@ -220,7 +202,7 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
             .join(manifest_map, "doc_id")
         )
         write_table(
-            cleaned.repartition(args.n_shards, "shard"),
+            cleaned.repartition(N_SHARDS, "shard"),
             snapshot_loc, mode="overwrite", partition_by=["shard"],
         )
         return {"spans": read_table(spark, snapshot_loc).count()}

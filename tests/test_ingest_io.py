@@ -13,7 +13,6 @@ from text_extract_api_spark.extractors.media import (
 from text_extract_api_spark.extractors.office import make_docx, make_pptx
 from text_extract_api_spark.ingest import (
     ingest_binary,
-    is_pdf_col,
     read_binary_files,
     sniff_fmt_col,
 )
@@ -75,12 +74,6 @@ def test_sniff_magic_priority_and_pdf_predicate(spark):
     assert got["html_bom"] == ("html", "html")
     assert got["html_ws"] == ("html", "html")
     assert got["text"] == ("text", "text")
-
-    pdf_flags = {
-        r["tag"]: r["is_pdf"]
-        for r in df.select("tag", is_pdf_col(F.col("content")).alias("is_pdf")).collect()
-    }
-    assert pdf_flags["pdf"] and not pdf_flags["jpeg"]
 
 
 def test_sniff_is_pure_codegen(spark):
@@ -155,41 +148,6 @@ def test_table_exists_answers_missing_without_a_read(spark, tmp_path, monkeypatc
     monkeypatch.setattr(DataFrameReader, "parquet", no_read)
     assert table_exists(spark, str(tmp_path / "missing")) is False
     assert table_exists(spark, f"file://{tmp_path}/missing/cache") is False
-
-
-def test_bucketed_cache_join_is_shuffle_free(spark, sf_dir, tmp_path):
-    """J1 at scale: docs and cache both bucketed by content_hash → the cache
-    anti/inner joins run with NO Exchange (each task reads matching buckets).
-    This is the write-once-shuffle-never co-location the pipeline relies on
-    for a 10^12-row cache table."""
-    from text_extract_api_spark.io import write_bucketed
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", F.md5("text").alias("content_hash"))
-    )
-    cache = docs.filter(F.col("doc_id") % 10 == 0).select("content_hash")
-
-    write_bucketed(docs, "bdocs", "content_hash", 8)
-    write_bucketed(cache, "bcache", "content_hash", 8)
-    try:
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            t_docs, t_cache = spark.table("bdocs"), spark.table("bcache")
-            misses = t_docs.join(t_cache, "content_hash", "left_anti")
-            hits = t_docs.join(t_cache, "content_hash", "inner")
-            for df in (misses, hits):
-                plan = df._jdf.queryExecution().executedPlan().toString()
-                assert "SortMergeJoin" in plan
-                assert "Exchange" not in plan  # co-located: zero shuffles
-            # and the results are still correct
-            assert misses.count() + hits.count() == docs.count()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bdocs")
-        spark.sql("DROP TABLE IF EXISTS bcache")
 
 
 def test_raw_files_job_end_to_end(spark, tmp_path):
@@ -269,22 +227,3 @@ def test_raw_files_job_tolerates_non_utf8(spark, tmp_path):
     }
     assert rows["ok.txt"] == "clean ascii"
     assert "au lait" in rows["legacy.txt"]  # survived, lenient-decoded
-
-
-def test_normalize_documents_pins_null_text(spark):
-    df = spark.createDataFrame(
-        [(1, None, 99), (2, "", 0), (3, "abc", 3)],
-        "doc_id int, text string, n_chars long",
-    )
-    from text_extract_api_spark.ingest import normalize_documents
-
-    out = {r["doc_id"]: (r["text"], r["n_chars"])
-           for r in normalize_documents(df).collect()}
-    assert out[1] == ("", 0)      # NULL -> '' and n_chars recomputed
-    assert out[2] == ("", 0)
-    assert out[3] == ("abc", 3)
-    # frame without an n_chars column: text still normalized, no new column
-    df2 = spark.createDataFrame([(1, None)], "doc_id int, text string")
-    out2 = normalize_documents(df2)
-    assert out2.columns == ["doc_id", "text"]
-    assert out2.collect()[0]["text"] == ""

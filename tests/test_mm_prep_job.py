@@ -229,6 +229,21 @@ def mm_ref_manifest(spark, tmp_path_factory):
     return rows
 
 
+def test_mm_prep_keeps_only_mm_corpus_prep_docs(spark, mm_ref_manifest):
+    """The job's structure and anchoring gates are the oracle-checked
+    ``mm_corpus_prep`` funnel's; the boilerplate and hot-media gates only
+    reject more. So every doc the job keeps passes that query."""
+    import __spark_entry__ as entrymod
+
+    passed = {
+        r["doc_id"]
+        for r in entrymod.queries()["mm_corpus_prep"](spark, SF)
+        .select("doc_id").collect()
+    }
+    kept = {doc_id for doc_id, _, _ in mm_ref_manifest}
+    assert kept and kept <= passed
+
+
 @pytest.mark.parametrize(
     "crash_point",
     ["hotspans", "verdicts_wave_1", "rejects", "manifest", "snapshot"],

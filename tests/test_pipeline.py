@@ -265,8 +265,9 @@ def test_table_input_runs_the_dedup_chain_once(spark, sf_dir, tmp_path):
 
 def test_nullable_table_input_hashes_and_rows(spark, tmp_path):
     """A parquet-read table holding a doc with null spans, one with [] and
-    two duplicates. Neither the null nor the [] doc gets a result row, with
-    or without a cache; the duplicates share one extraction. Every hash of
+    two duplicates. The null and the [] doc each get a result row with no
+    spans, computed (never cached) with or without a cache; the duplicates
+    share one extraction. Every hash of
     a non-null payload is the md5 of the canonical payload, so cache
     tables written by earlier runs keep hitting."""
     import hashlib
@@ -305,9 +306,14 @@ def test_nullable_table_input_hashes_and_rows(spark, tmp_path):
         "d1": (hashes["d1"], [("text", "a b", "", 0), ("html", "same", "", 1)], False),
         "d2": (hashes["d1"], [("text", "a b", "", 0), ("html", "same", "", 1)], False),
         "u": (hashes["u"], [("markdown", "head", "", 0)], False),
+        "n": ("", [], False),
+        "e": (hashlib.md5(b"").hexdigest(), [], False),
     }
     assert new_cache.count() == 2
 
+    # the cache holds only docs with spans: n and e are computed again
     results, new_cache = run_extract_pipeline(spark, docs, None, new_cache, "warm")
-    assert collect(results) == {k: (h, s, True) for k, (h, s, _) in cold.items()}
+    assert collect(results) == {
+        k: (h, s, bool(s)) for k, (h, s, _) in cold.items()
+    }
     assert new_cache.count() == 0

@@ -89,6 +89,20 @@ def ref_manifest(spark, tmp_path_factory):
     return rows
 
 
+def test_prep_job_manifest_is_the_corpus_prep_e2e_query(spark, ref_manifest):
+    """The job and the oracle-checked ``corpus_prep_e2e`` query compose the
+    same operators with the same thresholds, quota and shard count: their
+    manifests are equal row for row."""
+    import __spark_entry__ as entrymod
+
+    query = entrymod.queries()["corpus_prep_e2e"](spark, SF)
+    want = sorted(
+        (r["doc_id"], r["source"], r["shard"], r["pos"]) for r in query.collect()
+    )
+    assert want
+    assert ref_manifest == want
+
+
 @pytest.mark.parametrize(
     "crash_point", ["noncanon", "verdicts_wave_1", "rejects", "manifest"]
 )

@@ -174,24 +174,3 @@ def test_env_placeholder_resolution(tmp_path, monkeypatch):
     )
     reg = load_registry_from_config(str(conf))
     assert reg.get("pdf").config["page_sep"] == "||"
-
-
-def test_split_unknown_kinds(spark):
-    """P1: rows whose kind no strategy claims go to quarantine with a
-    reason, valid rows pass — nothing is dropped."""
-    from text_extract_api_spark.registry import split_unknown_kinds
-
-    reg = default_registry()
-    flat = spark.createDataFrame(
-        [
-            ("d1", "text", "ok", "", 0),
-            ("d1", "exotic_kind", "x", "", 1),
-            ("d1", None, "y", "", 2),
-        ],
-        "key string, kind string, text string, media_ref string, offset int",
-    )
-    valid, quarantined = split_unknown_kinds(flat, reg)
-    assert [r["offset"] for r in valid.collect()] == [0]
-    q = {r["offset"]: r["reason"] for r in quarantined.collect()}
-    assert q == {1: "unknown_kind", 2: "unknown_kind"}
-    assert valid.count() + quarantined.count() == flat.count()

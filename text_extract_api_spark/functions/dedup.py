@@ -169,37 +169,6 @@ def jaccard_pairs(
     return _scoped_materialize(doc_shingle_arrays(docs, id_col, text_col, n), build)
 
 
-def minhash_seed_col(sh_col, seed: int) -> F.Column:
-    """One seed's minwise hash: lexicographic min of md5(seed||':'||shingle)
-    over the row's shingle array. Row-local, zero shuffles.
-
-    Lexicographic min over uniformly-distributed hex digests is a valid
-    minwise hash; identical SQL exists in DuckDB (oracle parity).
-    """
-    return F.array_min(
-        F.transform(sh_col, lambda x: F.md5(F.concat(F.lit(f"{seed}:"), x)))
-    )
-
-
-def minhash_signature(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3,
-    seeds: int = MINHASH_SEEDS,
-) -> DataFrame:
-    """(id, sig_0..sig_{seeds-1}) — each seed column built exactly once.
-
-    IMPORTANT construction detail: each ``minhash_seed_col`` expression must
-    appear exactly once in the projection. Building an intermediate array
-    column and indexing it with ``element_at`` looks equivalent, but
-    ProjectCollapse inlines the whole array expression into every reference
-    and CSE does not dedupe inside higher-order-function lambdas — a 12×
-    blowup measured at 251 s vs 20 s on the sf0.1 bench.
-    """
-    base = doc_shingle_arrays(docs, id_col, text_col, n)
-    return base.select(
-        "id", *[minhash_seed_col(F.col("sh"), s).alias(f"sig_{s}") for s in range(seeds)]
-    )
-
-
 def _band_pairs(base: DataFrame) -> DataFrame:
     """Distinct candidate pairs from a (id, sh, n_sh, bands:array) frame.
 

@@ -57,11 +57,6 @@ FMT_TO_KIND = {
 }
 
 
-def is_pdf_col(content: Column) -> Column:
-    """The reference's PDF magic-byte predicate (pdf.py:32-34) as codegen."""
-    return F.substring(content, 1, 4) == F.lit(b"%PDF")
-
-
 def sniff_fmt_col(content: Column) -> Column:
     """Magic-byte format sniff over a binary column — pure JVM CASE chain.
 
@@ -172,22 +167,3 @@ def ingest_binary(df: DataFrame, content_col: str = "content") -> DataFrame:
     sniffed = df.withColumn("fmt", sniff_fmt_col(F.col(content_col)))
     resolved = resolve_zip_fmt(sniffed, content_col=content_col)
     return resolved.withColumn("kind", kind_from_fmt_col(F.col("fmt")))
-
-
-def normalize_documents(
-    docs: DataFrame, text_col: str = "text", n_chars_col: str = "n_chars"
-) -> DataFrame:
-    """Pin NULL-text semantics at the ingest boundary: NULL → '' and the
-    length column recomputed to match.
-
-    The engine's operators define their behavior over NON-NULL text (empty
-    string = "no content"); NULL propagation through split/length/regexp
-    chains differs between engines (Spark vs the DuckDB oracles diverge in
-    13 queries on a NULL-text corpus — measured r3), so the contract
-    normalizes once here instead of NULL-guarding every operator. Narrow
-    codegen projection, zero shuffles."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    out = docs.withColumn(text_col, txt)
-    if n_chars_col in docs.columns:
-        out = out.withColumn(n_chars_col, F.length(F.col(text_col)).cast("bigint"))
-    return out

@@ -87,33 +87,6 @@ def table_exists(spark: SparkSession, location: str) -> bool:
     return True
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int,
-    mode: str = "overwrite",
-) -> None:
-    """Write a bucket-co-located table: pre-shuffle ONCE at write time so
-    every future equi-join / aggregation on ``bucket_col`` is exchange-free
-    (both sides scan matching buckets; verified by test — no Exchange in the
-    join plan).
-
-    This is the at-scale form of the cache join (J1): the docs and cache
-    tables are both bucketed by ``content_hash``, so the per-run anti/inner
-    joins against a 10^12-row cache skip the corpus-wide shuffle entirely.
-    Iceberg analog: a ``bucket(n, col)`` partition transform; parquet
-    fallback: Spark native bucketing via ``saveAsTable`` (bucketing metadata
-    needs a catalog table — plain ``.parquet(path)`` cannot carry it)."""
-    (
-        df.write.mode(mode)
-        .format("parquet")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .saveAsTable(table_name)
-    )
-
-
 def list_tables(spark: SparkSession, base: str) -> list[str]:
     """List stored tables under a namespace/directory — the engine analog of
     the reference's per-backend ``list`` (storage_manager.py:37-44,

@@ -87,9 +87,11 @@ def crash_point(point: str) -> None:
 class Job:
     """One job run: its session, arguments, progress table and clock.
 
-    ``spark=None`` creates a session that ``finish`` stops; an injected
-    session (tests, benches) is left running, only switched to dynamic
-    partition overwrite, which idempotent wave re-writes need."""
+    ``spark=None`` creates a session that ``finish`` stops. An injected
+    session (tests, benches) is left running with two settings changed and
+    never reset: it is switched to dynamic partition overwrite, which
+    idempotent wave re-writes need, and ``size_shuffles`` may raise its
+    ``spark.sql.shuffle.partitions``."""
 
     def __init__(self, app: str, args, spark: SparkSession | None = None):
         self.args = args

@@ -353,14 +353,18 @@ def run_extract_pipeline(
     )
 
     # fan-back: rep_out is already hash-partitioned by content_hash (it is
-    # the reassemble output), so only the slim side moves.
+    # the reassemble output), so only the slim side moves. A left join: a
+    # doc whose spans are null or [] explodes to nothing, so rep_out holds
+    # no row for it, and it still gets a result row with no spans.
     computed = (
         miss_slim
-        .join(rep_out.hint("merge"), "content_hash", "inner")
+        .join(rep_out.hint("merge"), "content_hash", "left")
         .select(
             "doc_id",
             "content_hash",
-            "spans",
+            F.coalesce(
+                "spans", F.array().cast(rep_out.schema["spans"].dataType)
+            ).alias("spans"),
             F.lit(run_id).alias("run_id"),
             F.lit(False).alias("from_cache"),
         )

@@ -147,33 +147,6 @@ def load_registry_from_config(
     return registry
 
 
-def known_kinds(registry: StrategyRegistry) -> set[str]:
-    """Every kind some registered strategy claims."""
-    out: set[str] = set()
-    for strat in registry.strategies():
-        out.update(strat.kinds)
-    return out
-
-
-def split_unknown_kinds(flat: DataFrame, registry: StrategyRegistry):
-    """Request-validation predicate (P1 — the reference's Pydantic
-    strategy-must-exist validators, main.py:104-144, which 400 the request):
-    split a flat span frame into (valid, quarantined) on whether any
-    registered strategy claims the row's kind. The batch engine quarantines
-    instead of failing the job: a poison row must not kill 10^12 documents.
-    """
-    from pyspark.sql import functions as F
-
-    kinds = sorted(known_kinds(registry))
-    is_known = F.col("kind").isin(*kinds)
-    return (
-        flat.filter(is_known),
-        flat.filter(F.coalesce(~is_known, F.lit(True))).withColumn(
-            "reason", F.lit("unknown_kind")
-        ),
-    )
-
-
 def autodiscover(
     registry: StrategyRegistry,
     package: str = "text_extract_api_spark.extractors",

@@ -21,63 +21,12 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from text_extract_api_spark.telemetry import read_stages  # noqa: E402
+
 INFLATE = int(os.environ.get("SPARK_GRAFT_SCALE_INFLATE", "32"))
 CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-def parse_stages(evl_dir: str) -> list[dict]:
-    """Per-stage (task-time core-s, cpu core-s, shuffle r/w MB, n_tasks),
-    labeled from the stage's callsite name, sorted by task time desc."""
-    import glob
-
-    import pyarrow as pa
-
-    stages: dict[int, dict] = {}
-    names: dict[int, str] = {}
-    for path in glob.glob(f"{evl_dir}/**/events*", recursive=True) or glob.glob(
-        f"{evl_dir}/*"
-    ):
-        if os.path.isdir(path) or path.endswith(".crc"):
-            continue
-        if path.endswith(".zstd"):
-            data = pa.CompressedInputStream(pa.OSFile(path), "zstd").read()
-        else:
-            data = open(path, "rb").read()
-        for line in data.decode("utf-8", "replace").splitlines():
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if ev.get("Event") == "SparkListenerStageCompleted":
-                si = ev.get("Stage Info") or {}
-                names[si.get("Stage ID", -1)] = si.get("Stage Name", "?")
-            elif ev.get("Event") == "SparkListenerTaskEnd":
-                sid = ev.get("Stage ID", -1)
-                m = ev.get("Task Metrics") or {}
-                s = stages.setdefault(
-                    sid,
-                    {"run_s": 0.0, "cpu_s": 0.0, "sh_w_mb": 0.0, "sh_r_mb": 0.0,
-                     "n_tasks": 0},
-                )
-                s["run_s"] += m.get("Executor Run Time", 0) / 1000
-                s["cpu_s"] += m.get("Executor CPU Time", 0) / 1e9
-                sw = m.get("Shuffle Write Metrics") or {}
-                s["sh_w_mb"] += sw.get("Shuffle Bytes Written", 0) / 1e6
-                sr = m.get("Shuffle Read Metrics") or {}
-                s["sh_r_mb"] += (
-                    sr.get("Local Bytes Read", 0) + sr.get("Remote Bytes Read", 0)
-                ) / 1e6
-                s["n_tasks"] += 1
-    out = []
-    for sid, s in stages.items():
-        out.append(
-            {
-                "stage": sid,
-                "name": (names.get(sid, "?") or "?").split("\n")[0][:60],
-                **{k: round(v, 1) if isinstance(v, float) else v for k, v in s.items()},
-            }
-        )
-    return sorted(out, key=lambda s: -s["run_s"])
 
 
 def run_once(sf_dir: str, mult: int) -> dict:
@@ -115,7 +64,7 @@ def run_once(sf_dir: str, mult: int) -> dict:
         if not lines:
             return {"mult": mult, "error": proc.stderr[-2000:]}
         r = json.loads(lines[-1])
-        stages = parse_stages(evl)
+        stages = read_stages(evl)
         return {
             "mult": mult,
             "docs": r["docs"],
@@ -125,7 +74,10 @@ def run_once(sf_dir: str, mult: int) -> dict:
             "ambient_load": round(os.getloadavg()[0], 2),
             "total_task_run_s": round(sum(s["run_s"] for s in stages)),
             "total_shuffle_w_mb": round(sum(s["sh_w_mb"] for s in stages), 1),
-            "top_stages": stages[:8],
+            "top_stages": [
+                {k: round(v, 1) if isinstance(v, float) else v for k, v in s.items()}
+                for s in stages[:8]
+            ],
         }
     finally:
         shutil.rmtree(out, ignore_errors=True)

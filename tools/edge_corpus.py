@@ -18,11 +18,12 @@ tests/test_quality.py instead (the media synth oracle's byte_len ==
 char_len assumption keeps this corpus pure-ASCII).
 
 Scope notes (documented assumptions, verified r3):
-- text is NOT NULL here: the engine's documented input contract normalizes
-  NULL text at ingest (a NULL-text corpus diverges from the SQL oracles in
-  13 queries because Spark and DuckDB disagree on NULL propagation through
-  split/length/regexp chains — pin NULLs out at the boundary, not in every
-  operator).
+- text is NOT NULL here: NULL text is outside the tested input contract.
+  Nothing in the engine normalizes it, and a NULL-text corpus diverges
+  from the SQL oracles in 13 queries (measured r3) because Spark and
+  DuckDB disagree on NULL propagation through split/length/regexp chains.
+  Pinning NULL semantics is left to the real-world-bytes work (ROADMAP
+  direction 4).
 - ASCII only: the media synth oracle documents byte_len == char-length
   (pure-ASCII corpus assumption, __spark_entry__._media_meta_sql); unicode
   payloads are exercised by the extractor unit tests instead.

@@ -24,7 +24,6 @@ Usage: python tools/scaling_bench.py [sf_dir] [--quick]
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import statistics
@@ -34,6 +33,9 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from text_extract_api_spark.telemetry import COUNTERS, read_stages  # noqa: E402
 
 CORES = tuple(
     int(x) for x in os.environ.get("SPARK_GRAFT_SCALE_CORES", "2,8").split(",")
@@ -62,47 +64,18 @@ METHOD = "r4-zstd-pinned" + (
 # changes what the pair measures, so ×64 pairs must not pool with ×16 ones
 
 
-def parse_eventlog(evl_dir: str) -> dict:
-    """Sum task run/CPU core-seconds from a (zstd) Spark event log."""
-    import pyarrow as pa
-
-    paths = glob.glob(f"{evl_dir}/**/events*", recursive=True) or glob.glob(
-        f"{evl_dir}/*"
-    )
-    run = cpu = gc = 0.0
-    sh_write = sh_read = 0
-    n_tasks = 0
-    for path in paths:
-        if os.path.isdir(path) or path.endswith(".crc"):
-            continue
-        if path.endswith(".zstd"):
-            data = pa.CompressedInputStream(pa.OSFile(path), "zstd").read()
-        else:
-            data = open(path, "rb").read()
-        for line in data.decode("utf-8", "replace").splitlines():
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if ev.get("Event") == "SparkListenerTaskEnd":
-                n_tasks += 1
-                m = ev.get("Task Metrics") or {}
-                run += m.get("Executor Run Time", 0) / 1000
-                cpu += m.get("Executor CPU Time", 0) / 1e9
-                gc += m.get("JVM GC Time", 0) / 1000
-                sw = m.get("Shuffle Write Metrics") or {}
-                sh_write += sw.get("Shuffle Bytes Written", 0)
-                sr = m.get("Shuffle Read Metrics") or {}
-                sh_read += sr.get("Local Bytes Read", 0) + sr.get(
-                    "Remote Bytes Read", 0
-                )
+def eventlog_totals(evl_dir: str) -> dict:
+    """Task run/CPU/GC core-seconds, shuffle MB and task count, summed over
+    the stages of a Spark event log."""
+    stages = read_stages(evl_dir)
+    total = {k: sum(s[k] for s in stages) for k in COUNTERS}
     return {
-        "task_run_core_s": round(run),
-        "task_cpu_core_s": round(cpu),
-        "gc_s": round(gc),
-        "shuffle_write_mb": round(sh_write / 1e6, 1),
-        "shuffle_read_mb": round(sh_read / 1e6, 1),
-        "n_tasks": n_tasks,
+        "task_run_core_s": round(total["run_s"]),
+        "task_cpu_core_s": round(total["cpu_s"]),
+        "gc_s": round(total["gc_s"]),
+        "shuffle_write_mb": round(total["sh_w_mb"], 1),
+        "shuffle_read_mb": round(total["sh_r_mb"], 1),
+        "n_tasks": total["n_tasks"],
     }
 
 
@@ -156,7 +129,7 @@ def run_once(sf_dir: str, cores: int, multiplier: int, inflate: int) -> dict:
         )
         last = [l for l in proc.stdout.strip().splitlines() if l.startswith("{")][-1]
         r = json.loads(last)
-        r.update(parse_eventlog(evl))
+        r.update(eventlog_totals(evl))
         r["ambient_load"] = round(ambient, 2)
         steal1, total1 = _cpu_jiffies()
         # fraction of ALL box CPU time stolen by the host during this leg
