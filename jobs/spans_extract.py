@@ -88,12 +88,14 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     n_quarantined = 0
     if media is not None:
         validated = validate_media_pages(media).persist()
+        quarantined = Observation("quarantined")
         write_table(
             validated.filter(~F.col("valid")).select("media_ref", "page_no", "reason")
+            .observe(quarantined, F.count(F.lit(1)).alias("rows"))
             .coalesce(4),
             quarantine_loc, mode="overwrite",
         )
-        n_quarantined = read_table(spark, quarantine_loc).count()
+        n_quarantined = quarantined.get["rows"]
         media = validated.filter(F.col("valid")).select(
             "media_ref", "page_no", "page_text"
         )

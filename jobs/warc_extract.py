@@ -26,12 +26,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import Observation, functions as F  # noqa: E402
 
 from text_extract_api_spark import jobrun  # noqa: E402
 from text_extract_api_spark.extractors.warc import warc_ingest  # noqa: E402
 from text_extract_api_spark.ingest import read_binary_files  # noqa: E402
-from text_extract_api_spark.io import read_table, write_table  # noqa: E402
+from text_extract_api_spark.io import write_table  # noqa: E402
 from text_extract_api_spark.pipeline import run_extract_pipeline  # noqa: E402
 
 
@@ -81,9 +81,13 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     results, _ = run_extract_pipeline(
         spark, docs, media_pages=None, cache=None, run_id=args.run_id
     )
-    results_loc = f"{args.out}/results"
-    write_table(results, results_loc, mode="overwrite")
-    return job.finish(docs=read_table(spark, results_loc).count())
+    # the doc count rides the results write — no re-read of the table
+    written = Observation("results")
+    write_table(
+        results.observe(written, F.count(F.lit(1)).alias("docs")),
+        f"{args.out}/results", mode="overwrite",
+    )
+    return job.finish(docs=written.get["docs"])
 
 
 if __name__ == "__main__":

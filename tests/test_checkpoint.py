@@ -179,3 +179,153 @@ def test_crash_between_results_write_and_marker_is_exactly_once(
                   marks.groupBy("bucket").agg(F.count("*").alias("cnt")).collect()}
     assert set(per_bucket) == set(range(N_BUCKETS))
     assert all(c == 1 for c in per_bucket.values()), per_bucket
+
+
+# The parquet schema of a progress file that holds a milestone or stage
+# row: the seven bookkeeping columns optional (as a createDataFrame of
+# _PROGRESS_DDL made them), the pinned timestamp required.
+PROGRESS_PARQUET = [
+    ("run_id", "string", True),
+    ("partition_id", "int32", True),
+    ("bucket", "int32", True),
+    ("status", "string", True),
+    ("docs_done", "int64", True),
+    ("spans_done", "int64", True),
+    ("bytes_done", "int64", True),
+    ("updated_at", "timestamp[ns]", False),
+]
+
+
+def _parquet_files(spark, location):
+    """Each parquet file's rows, sorted, after checking its schema."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = []
+    for path in glob.glob(f"{location}/*.parquet"):
+        schema = pq.read_schema(path)
+        assert [(f.name, str(f.type), f.nullable) for f in schema] == PROGRESS_PARQUET
+        files.append(sorted(tuple(r) for r in spark.read.parquet(path).collect()))
+    return files
+
+
+def test_progress_rows_keep_their_parquet_schema(spark, docs, tmp_path):
+    """A milestone row unioned into the bucket marks, and a standalone stage
+    marker, write the same optional columns and the same values. A bare
+    literal column is required, so unioned with the marks it would turn
+    ``run_id`` into a required parquet column."""
+    import datetime
+
+    from text_extract_api_spark.checkpoint import write_stage_marker
+
+    progress = str(tmp_path / "progress")
+    ts = "2026-01-01 00:00:00"
+    wave = docs.filter(F.col("bucket") < 2).select("doc_id", "spans", "bucket")
+    write_progress(
+        wave, progress, "rows", ts,
+        milestone=("wave_0_results", {"docs": 7, "spans": 11, "bytes": 2**40}),
+    )
+    write_stage_marker(spark, progress, "rows", ts, "noncanon", {"docs": 3})
+    write_stage_marker(spark, progress, "rows", ts, "rejects")
+
+    at = datetime.datetime(2026, 1, 1)
+    *stages, marks = sorted(_parquet_files(spark, progress), key=lambda f: (len(f), f))
+    assert stages == [
+        [("rows", -1, -1, "stage:noncanon", 3, 0, 0, at)],
+        [("rows", -1, -1, "stage:rejects", 0, 0, 0, at)],
+    ]
+    assert marks[0] == ("rows", -1, -1, "milestone:wave_0_results", 7, 11, 2**40, at)
+    assert [m[2] for m in marks[1:]] == [0, 1]
+    want = {
+        r["bucket"]: (r["n"], r["spans"]) for r in wave.groupBy("bucket").agg(
+            F.count("*").alias("n"), F.sum(F.size("spans")).alias("spans")
+        ).collect()
+    }
+    assert {m[2]: (m[4], m[5]) for m in marks[1:]} == want
+    assert all(m[:2] == ("rows", 0) and m[3] == "done" for m in marks[1:])
+
+
+# Runs in its own interpreter so the event log and the process count cover
+# one fresh session: both spans_extract calls, then a run_stage marker.
+_GUARD_SCRIPT = """
+import json, os, sys
+repo, tables, out = sys.argv[1:4]
+sys.path[:0] = [repo, os.path.join(repo, "jobs")]
+import spans_extract
+from text_extract_api_spark import jobrun
+from text_extract_api_spark.session import get_spark
+
+spark = get_spark("guard", master="local[2]")
+argv = ["--input-table", f"{tables}/docs", "--media-table", f"{tables}/media",
+        "--office-table", f"{tables}/office", "--out", out, "--run-id", "g",
+        "--waves", "2"]
+runs = [spans_extract.main(argv, spark=spark),
+        spans_extract.main(argv + ["--resume"], spark=spark)]
+args = jobrun.arg_parser("g", waves=True).parse_args(["--out", out])
+jobrun.Job("guard", args, spark).run_stage("probe", lambda: None)
+
+# pyspark.daemon processes under this interpreter (the JVM is its child);
+# a daemon's forked workers share its command line, so count the roots
+ppid, daemons = {}, set()
+for pid in filter(str.isdigit, os.listdir("/proc")):
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            ppid[int(pid)] = int(f.read().rsplit(")", 1)[1].split()[1])
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            if b"pyspark.daemon" in f.read():
+                daemons.add(int(pid))
+    except OSError:
+        pass
+
+def mine(pid):
+    while pid > 1:
+        pid = ppid.get(pid, 0)
+        if pid == os.getpid():
+            return True
+    return False
+
+roots = [p for p in daemons if mine(p) and ppid[p] not in daemons]
+spark.stop()
+print(json.dumps({"runs": runs, "daemons": len(roots)}))
+"""
+
+
+def test_job_bookkeeping_builds_no_python_rdd(spark, sf_dir, tmp_path):
+    """Progress rows, stage markers and the resume probes are built in the
+    JVM. A ``createDataFrame`` of a Python list would show up as a
+    ``PythonRDD`` stage and start a second ``pyspark.daemon`` next to the
+    one the Arrow legs use."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from text_extract_api_spark.synth import synthesize_interleaved_office
+    from text_extract_api_spark.telemetry import read_stages
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tables = str(tmp_path / "tables")
+    for name, df in zip(
+        ("docs", "media", "office"), synthesize_interleaved_office(spark, sf_dir)
+    ):
+        df.write.parquet(f"{tables}/{name}")
+    evl = tmp_path / "evl"
+    evl.mkdir()
+    env = dict(os.environ, SPARK_GRAFT_EXTRA_CONF=json.dumps({
+        "spark.eventLog.enabled": "true", "spark.eventLog.dir": str(evl),
+    }))
+    proc = subprocess.run(
+        [sys.executable, "-c", _GUARD_SCRIPT, repo, tables, str(tmp_path / "out")],
+        capture_output=True, text=True, timeout=600, cwd=repo, env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert [r["docs"] for r in got["runs"]] == [500, 0]
+    assert got["runs"][0]["quarantined"] == got["runs"][1]["quarantined"] == 25
+
+    stages = read_stages(str(evl))
+    assert stages and all(s["rdds"] for s in stages)
+    python_rdd = [s for s in stages if "PythonRDD" in s["rdds"]]
+    assert python_rdd == []
+    assert got["daemons"] == 1

@@ -9,7 +9,9 @@ from hypothesis import given, settings, strategies as st
 
 from text_extract_api_spark.extractors.html import extract_main_content_py
 from text_extract_api_spark.extractors.markdown import html_to_markdown_py
+from text_extract_api_spark.extractors.media import header_fixtures, parse_image_header
 from text_extract_api_spark.extractors.office import make_docx, make_pptx
+from text_extract_api_spark.extractors.pdf import extract_pdf_text, make_pdf
 from text_extract_api_spark.extractors.pii import (
     PII_PATTERNS,
     TOKEN,
@@ -22,6 +24,7 @@ from text_extract_api_spark.extractors.strategies import (
     office_pptx,
 )
 from text_extract_api_spark.extractors.text import normalize_ws
+from text_extract_api_spark.extractors.warc import make_warc, parse_warc
 from tests import oracle
 from tests.oracle import anonymize, norm, strip_md
 
@@ -118,21 +121,21 @@ def test_html_span_fns_total(s):
         assert isinstance(fn(s, None), str)
 
 
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=200, deadline=2000)
 @given(st.binary(max_size=256))
 def test_office_span_fns_total_on_arbitrary_bytes(payload):
     for fn in _OFFICE_FNS:
         assert isinstance(fn("", payload), str)
 
 
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(st.text(max_size=40), min_size=1, max_size=3),
-    st.integers(min_value=0, max_value=4096),
-    st.lists(
-        st.tuples(st.integers(min_value=0), st.integers(0, 255)), max_size=8
-    ),
+_CUT_ST = st.integers(min_value=0, max_value=4096)
+_FLIPS_ST = st.lists(
+    st.tuples(st.integers(min_value=0), st.integers(0, 255)), max_size=8
 )
+
+
+@settings(max_examples=100, deadline=2000)
+@given(st.lists(st.text(max_size=40), min_size=1, max_size=3), _CUT_ST, _FLIPS_ST)
 def test_office_span_fns_total_on_mutated_ooxml(texts, cut, flips):
     """Valid OOXML, then truncated and/or byte-flipped: every prefix and
     every corruption still yields a str."""
@@ -140,6 +143,86 @@ def test_office_span_fns_total_on_mutated_ooxml(texts, cut, flips):
         bad = _mutated(data, cut, flips)
         for fn in _OFFICE_FNS:
             assert isinstance(fn("", bad), str)
+
+
+# The container parsers of the ingest and media legs: one raising payload
+# would fail its whole Arrow batch, so each must return its documented
+# "nothing here" value for any bytes, whole fixtures cut short or
+# byte-flipped included.
+def _check_warc(records):
+    assert isinstance(records, list)
+    for r in records:
+        assert set(r) == {"url", "status", "mime", "body"}
+        assert isinstance(r["url"], str) and isinstance(r["mime"], str)
+        assert isinstance(r["status"], int) and isinstance(r["body"], bytes)
+
+
+def _check_image_header(got):
+    if got is not None:
+        fmt, w, h, depth, mode = got
+        assert fmt in {"png", "gif", "bmp", "jpeg"}
+        assert w > 0 and h > 0 and isinstance(depth, int) and mode
+
+
+def _check_pdf_pages(pages):
+    assert isinstance(pages, list) and all(isinstance(p, str) for p in pages)
+
+
+_MAGIC_ST = st.sampled_from(
+    [b"", b"WARC/1.0\r\n", b"\x1f\x8b", b"%PDF-1.4\n", b"\x89PNG\r\n\x1a\n",
+     b"GIF89a", b"BM", b"\xff\xd8\xff"]
+)
+
+
+@settings(max_examples=300, deadline=2000)
+@given(_MAGIC_ST, st.binary(max_size=512))
+def test_container_parsers_total_on_arbitrary_bytes(magic, tail):
+    payload = magic + tail
+    _check_warc(parse_warc(payload))
+    _check_image_header(parse_image_header(payload))
+    _check_pdf_pages(extract_pdf_text(payload))
+
+
+_WARC_RECS_ST = st.lists(
+    st.tuples(
+        # a URI is visible ASCII: no spaces, no CR/LF
+        st.text(st.characters(min_codepoint=33, max_codepoint=126), max_size=20),
+        st.binary(max_size=80),
+        st.sampled_from(["text/html", "text/plain", "image/png"]),
+    ),
+    min_size=1,
+    max_size=3,
+)
+
+
+@settings(max_examples=150, deadline=2000)
+@given(_WARC_RECS_ST, st.booleans(), st.integers(0, 9), _CUT_ST, _FLIPS_ST)
+def test_parse_warc_total_on_mutated_segments(recs, gz, chunked, cut, flips):
+    data = make_warc(recs, gzip_members=gz, chunked=chunked)
+    if not (cut or flips):
+        # the untouched fixture parses back whole
+        got = parse_warc(data)
+        assert [(r["url"], r["body"]) for r in got] == [(u, b) for u, b, _ in recs]
+    _check_warc(parse_warc(_mutated(data, cut, flips)))
+
+
+@settings(max_examples=150, deadline=2000)
+@given(st.sampled_from([data for _, data in header_fixtures()]), _CUT_ST, _FLIPS_ST)
+def test_parse_image_header_total_on_mutated_headers(data, cut, flips):
+    _check_image_header(parse_image_header(_mutated(data, cut, flips)))
+
+
+@settings(max_examples=100, deadline=2000)
+@given(
+    st.lists(st.text(max_size=30), min_size=1, max_size=3),
+    st.booleans(),
+    st.booleans(),
+    _CUT_ST,
+    _FLIPS_ST,
+)
+def test_extract_pdf_text_total_on_mutated_pdfs(pages, compress, objstm, cut, flips):
+    data = make_pdf(pages, compress=compress, objstm=objstm)
+    _check_pdf_pages(extract_pdf_text(_mutated(data, cut, flips)))
 
 
 # Differential tests of the regex-free whitespace passes against their

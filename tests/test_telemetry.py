@@ -29,11 +29,13 @@ def _task(stage, run_ms, cpu_ns, gc_ms=0, written=0, local=0, remote=0):
     }
 
 
-def _completed(stage, name):
-    return {
-        "Event": "SparkListenerStageCompleted",
-        "Stage Info": {"Stage ID": stage, "Stage Name": name},
-    }
+def _completed(stage, name, rdds=None):
+    info = {"Stage ID": stage, "Stage Name": name}
+    if rdds is not None:
+        info["RDD Info"] = [
+            {"RDD ID": i, "Name": n, "Callsite": "x"} for i, n in enumerate(rdds)
+        ]
+    return {"Event": "SparkListenerStageCompleted", "Stage Info": info}
 
 
 @pytest.fixture
@@ -54,7 +56,8 @@ def evl_dir(tmp_path):
         _task(2, 2000, 1_500_000_000, gc_ms=50, written=3_000_000,
               remote=4_000_000),
         _task(2, 1000, 500_000_000, gc_ms=50),
-        _completed(2, "save at Job.java:1"),
+        _completed(2, "save at Job.java:1",
+                   rdds=["ParallelCollectionRDD", "PythonRDD", "MapPartitionsRDD"]),
     ]
     with pa.CompressedOutputStream(
         str(rolled / "events_1_local-2.zstd"), "zstd"
@@ -70,6 +73,11 @@ def test_read_stages_sums_task_metrics_per_stage(evl_dir):
     assert got[0]["name"] == "count at NativeMethodAccessorImpl.java:0"
     assert got[1]["name"] == "?"
     assert got[2]["name"] == "save at Job.java:1"
+    # RDD names come from the completion event: none without "RDD Info",
+    # none without a completion event at all
+    assert got[0]["rdds"] == []
+    assert got[1]["rdds"] == []
+    assert got[2]["rdds"] == ["ParallelCollectionRDD", "PythonRDD", "MapPartitionsRDD"]
     want = {
         0: (2.0, 1.5, 0.1, 0.0, 3.0, 2),
         1: (4.0, 3.2, 0.25, 2.0, 0.0, 1),

@@ -50,6 +50,62 @@ def test_non_response_records_skipped_and_totality():
         assert isinstance(parse_warc(junk), list)
 
 
+@pytest.mark.parametrize("gz", [False, True])
+@pytest.mark.parametrize("size", [1, 5, 4096])
+def test_chunked_bodies_are_dechunked(gz, size):
+    got = parse_warc(make_warc(RECS, gzip_members=gz, chunked=size))
+    assert [(r["url"], r["body"], r["mime"], r["status"]) for r in got] == [
+        (u, b, c, 200) for u, b, c in RECS
+    ]
+
+
+def _http_record(http: bytes, warc_type: bytes = b"response") -> bytes:
+    return (
+        b"WARC/1.0\r\nWARC-Type: " + warc_type
+        + b"\r\nWARC-Target-URI: http://c/x\r\nContent-Length: "
+        + str(len(http)).encode() + b"\r\n\r\n" + http + b"\r\n\r\n"
+    )
+
+
+@pytest.mark.parametrize(
+    "chunks,want",
+    [
+        # extensions and trailer fields are framing, not payload
+        (b"4;name=v\r\nWiki\r\n5\r\npedia\r\n0\r\nExpires: x\r\n\r\n",
+         b"Wikipedia"),
+        # a bad size line ends the body after the chunks before it
+        (b"4\r\nWiki\r\nzz\r\npedia\r\n0\r\n\r\n", b"Wiki"),
+        # int(x, 16) would read these as sizes
+        (b"4\r\nWiki\r\n0x5\r\npedia\r\n0\r\n\r\n", b"Wiki"),
+        (b"4\r\nWiki\r\n+5\r\npedia\r\n0\r\n\r\n", b"Wiki"),
+        # a chunk longer than its size: its declared bytes, then stop
+        (b"4\r\nWikipedia\r\n0\r\n\r\n", b"Wiki"),
+        # cut short: the bytes that are there
+        (b"ff\r\nWiki", b"Wiki"),
+        # no last chunk, no size line at all
+        (b"4\r\nWiki\r\n", b"Wiki"),
+        (b"", b""),
+    ],
+)
+def test_malformed_chunk_framing_keeps_what_decoded(chunks, want):
+    http = (
+        b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
+        b"Transfer-Encoding: Chunked\r\n\r\n" + chunks
+    )
+    (got,) = parse_warc(_http_record(http))
+    assert got["body"] == want and got["status"] == 200
+
+
+def test_revisit_records_are_skipped():
+    """A revisit record holds an HTTP envelope too (headers, no payload);
+    only response records become rows."""
+    revisit = _http_record(
+        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n", b"revisit"
+    )
+    got = parse_warc(revisit + make_warc(RECS[1:2]) + revisit)
+    assert [r["url"] for r in got] == ["http://example.com/b"]
+
+
 def test_warc_extract_job_end_to_end(spark, tmp_path):
     """A directory of .warc.gz segments → extracted spans: html stripped
     to the article, text decoded, binaries riding as media refs."""

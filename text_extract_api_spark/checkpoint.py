@@ -26,6 +26,7 @@ markers tiny at any scale.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .io import read_table, table_exists, write_table
 from .partitioning import payload_size_col
@@ -36,28 +37,42 @@ _PROGRESS_DDL = (
 )
 
 
+def _jvm_frame(spark: SparkSession, ddl: str, row: tuple | None = None) -> DataFrame:
+    """A frame of the ``ddl`` schema with one row of ``row``, or none when
+    ``row`` is None, built in the JVM from literals.
+
+    ``spark.createDataFrame`` of a Python list would do the same through a
+    Python-backed RDD, which the JVM serves from a second ``pyspark.daemon``
+    and worker rather than from the pool the Arrow legs already warmed
+    (timings in ``write_progress``). Every column stays nullable as a
+    ``createDataFrame`` column is: a bare literal is not, and unioned with
+    the per-bucket marks it would make ``run_id`` a required parquet
+    column. The ``id == 0`` condition is what keeps the optimizer from
+    folding the values back into bare literals."""
+    fields = StructType.fromDDL(ddl).fields
+    keep = F.col("id") == 0
+    return spark.range(0 if row is None else 1, numPartitions=1).select(*[
+        F.when(keep, F.lit(v)).cast(f.dataType).alias(f.name)
+        for f, v in zip(fields, row or [None] * len(fields))
+    ])
+
+
 def _milestone_row(
     spark: SparkSession, run_id: str, run_ts: str, status: str, metrics: dict
 ) -> DataFrame:
     """One bucket-less progress row (milestones and stage markers — the
     schema must stay identical to the per-bucket ``done`` rows)."""
-    return (
-        spark.createDataFrame(
-            [
-                (
-                    run_id,
-                    -1,
-                    -1,
-                    status,
-                    int(metrics.get("docs") or 0),
-                    int(metrics.get("spans") or 0),
-                    int(metrics.get("bytes") or 0),
-                )
-            ],
-            _PROGRESS_DDL,
-        )
-        .withColumn("updated_at", F.lit(run_ts).cast("timestamp"))
-        .coalesce(1)
+    row = (
+        run_id,
+        -1,
+        -1,
+        status,
+        int(metrics.get("docs") or 0),
+        int(metrics.get("spans") or 0),
+        int(metrics.get("bytes") or 0),
+    )
+    return _jvm_frame(spark, _PROGRESS_DDL, row).withColumn(
+        "updated_at", F.lit(run_ts).cast("timestamp")
     )
 
 
@@ -76,7 +91,7 @@ def completed_buckets(spark: SparkSession, progress_loc: str, run_id: str) -> Da
     """Buckets already marked done for this run (empty if no progress yet)."""
     prog = _run_progress(spark, progress_loc, run_id)
     if prog is None:
-        return spark.createDataFrame([], "bucket int")
+        return _jvm_frame(spark, "bucket int")
     return prog.filter(F.col("status") == "done").select("bucket").distinct()
 
 
@@ -117,8 +132,8 @@ def poll_progress(spark: SparkSession, progress_loc: str, run_id: str) -> DataFr
     main.py:171-188): per-status rollup for a run. Empty frame = PENDING."""
     prog = _run_progress(spark, progress_loc, run_id)
     if prog is None:
-        return spark.createDataFrame(
-            [], "status string, n_marks long, docs_done long, spans_done long"
+        return _jvm_frame(
+            spark, "status string, n_marks long, docs_done long, spans_done long"
         )
     return prog.groupBy("status").agg(
         F.count("*").alias("n_marks"),
@@ -144,8 +159,12 @@ def write_progress(
 
     ``milestone``: optional ``(name, metrics)`` — unioned into the same
     append so the marker write and the milestone cost ONE action, not two
-    (each extra action is fixed non-scaling driver time; measured ~1.9 s for
-    a single milestone row at local[8]).
+    (each extra action is fixed non-scaling driver time). The ~1.9 s once
+    measured for a single milestone row at local[8] was mostly the start of
+    a second ``pyspark.daemon`` for the row's Python-backed RDD. At
+    local[4], after an Arrow leg had run, a stage-marker write built that
+    way took 1.3–2.6 s the first time in a session and 0.5–0.75 s after;
+    built from JVM literals (``_jvm_frame``) it takes 0.17–0.29 s.
     """
     spans, nbytes = _spans_metrics(results)
     marks = (

@@ -8,10 +8,11 @@ listing. This module parses both layouts with stdlib ``zlib`` only:
 
 - :func:`make_warc` — deterministic fixture writer (WARC/1.0 response
   records wrapping an HTTP/1.1 envelope), optionally gzipped per record
-  exactly like Common Crawl ships them.
+  exactly like Common Crawl ships them, and optionally with
+  ``Transfer-Encoding: chunked`` bodies.
 - :func:`parse_warc` — record splitter + header parser + HTTP envelope
-  strip; total over garbage (a malformed record is skipped, never a
-  crash).
+  strip + chunked-body decode; total over garbage (a malformed record is
+  skipped, malformed chunk framing ends its body early, never a crash).
 - :func:`warc_ingest` — the distributed operator: one Arrow batch pass,
   one output row per response record; segments are the parallel unit
   (each WARC blob parses independently — at CC scale one task per
@@ -41,21 +42,39 @@ def _gzip_member(data: bytes) -> bytes:
     return co.compress(data) + co.flush()
 
 
+def _chunk(payload: bytes, size: int) -> bytes:
+    """``payload`` in chunked transfer coding: ``size``-byte chunks, each
+    behind its hex length line, then the zero-length last chunk."""
+    out = bytearray()
+    for i in range(0, len(payload), size):
+        piece = payload[i : i + size]
+        out += b"%x" % len(piece) + _CRLF + piece + _CRLF
+    return bytes(out + b"0" + _CRLF + _CRLF)
+
+
 def make_warc(
-    records: list[tuple[str, bytes, str]], gzip_members: bool = False
+    records: list[tuple[str, bytes, str]],
+    gzip_members: bool = False,
+    chunked: int = 0,
 ) -> bytes:
     """Records of (target_uri, payload_bytes, content_type) → WARC/1.0
     response records with an HTTP/1.1 200 envelope; ``gzip_members=True``
     emits one gzip member per record (the Common Crawl .warc.gz layout,
-    concatenated members)."""
+    concatenated members); ``chunked=n`` sends each HTTP body with
+    ``Transfer-Encoding: chunked`` in ``n``-byte chunks instead of a
+    ``Content-Length``."""
     out = bytearray()
     for uri, payload, ctype in records:
+        framing = (
+            b"Transfer-Encoding: chunked" if chunked
+            else b"Content-Length: " + str(len(payload)).encode()
+        )
         http = (
             b"HTTP/1.1 200 OK" + _CRLF
             + b"Content-Type: " + ctype.encode("ascii") + _CRLF
-            + b"Content-Length: " + str(len(payload)).encode() + _CRLF
+            + framing + _CRLF
             + _CRLF
-            + payload
+            + (_chunk(payload, chunked) if chunked else payload)
         )
         rec = (
             b"WARC/1.0" + _CRLF
@@ -94,6 +113,34 @@ def _split_gzip_members(p: bytes) -> list[bytes]:
 
 
 _WARC_MAGIC_RE = re.compile(rb"WARC/\d\.\d\r?\n")
+_CHUNK_SIZE_RE = re.compile(rb"[0-9A-Fa-f]+")
+
+
+def _dechunk(body: bytes) -> bytes:
+    """Decode a ``Transfer-Encoding: chunked`` body (RFC 9112 §7.1):
+    chunk extensions and trailer fields are dropped. Total: a malformed
+    size line, a chunk cut short or a missing chunk CRLF ends the decode
+    with the bytes decoded so far."""
+    out = bytearray()
+    pos = 0
+    while True:
+        eol = body.find(_CRLF, pos)
+        if eol == -1:
+            break
+        size_line = body[pos:eol].split(b";", 1)[0].strip(b" \t")
+        # fullmatch, not int(x, 16): that also takes "0x", "+" and "_"
+        if not _CHUNK_SIZE_RE.fullmatch(size_line):
+            break
+        size = int(size_line, 16)
+        if size == 0:
+            break
+        start = eol + 2
+        out += body[start : start + size]
+        pos = start + size
+        if body[pos : pos + 2] != _CRLF:
+            break
+        pos += 2
+    return bytes(out)
 
 
 def _walk_records(chunk: bytes) -> Iterator[tuple[dict[bytes, bytes], bytes]]:
@@ -134,8 +181,9 @@ def _walk_records(chunk: bytes) -> Iterator[tuple[dict[bytes, bytes], bytes]]:
 def parse_warc(payload: bytes) -> list[dict]:
     """All WARC *response* records of a segment, in order:
     ``{"url", "status", "mime", "body"}``. Handles plain and
-    per-record-gzipped segments; non-response records (warcinfo, request,
-    metadata) are skipped; malformed records are dropped, never raised."""
+    per-record-gzipped segments; a chunked HTTP body is de-chunked;
+    non-response records (warcinfo, request, metadata, revisit) are
+    skipped; malformed records are dropped, never raised."""
     p = payload or b""
     if p[:2] == b"\x1f\x8b":
         chunks = _split_gzip_members(p)
@@ -158,11 +206,18 @@ def parse_warc(payload: bytes) -> list[dict]:
                     hend = body.index(b"\r\n\r\n")
                 except ValueError:
                     continue
+                chunked = False
                 for line in body[:hend].split(b"\r\n")[1:]:
                     k, _, v = line.partition(b":")
-                    if k.strip().lower() == b"content-type":
+                    k = k.strip().lower()
+                    if k == b"content-type":
                         mime = v.strip().decode("latin-1")
+                    elif k == b"transfer-encoding":
+                        # chunked is always the last coding applied
+                        chunked = v.split(b",")[-1].strip().lower() == b"chunked"
                 payload_bytes = body[hend + 4 :]
+                if chunked:
+                    payload_bytes = _dechunk(payload_bytes)
             out.append(
                 {
                     "url": headers.get(b"warc-target-uri", b"").decode("latin-1"),

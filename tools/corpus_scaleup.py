@@ -75,7 +75,10 @@ def run_once(sf_dir: str, mult: int) -> dict:
             "total_task_run_s": round(sum(s["run_s"] for s in stages)),
             "total_shuffle_w_mb": round(sum(s["sh_w_mb"] for s in stages), 1),
             "top_stages": [
-                {k: round(v, 1) if isinstance(v, float) else v for k, v in s.items()}
+                {
+                    k: round(v, 1) if isinstance(v, float) else v
+                    for k, v in s.items() if k != "rdds"
+                }
                 for s in stages[:8]
             ],
         }
